@@ -18,20 +18,26 @@ Subcommands:
 
 - ``wordcount IN... -o OUT``: tokenize on non-letters (the
   reference's ``FieldsFunc(unicode.IsLetter)`` rule), count, global
-  sort, single merged text file. ``--chunked`` scans through the
-  space-aligned 100 KiB byte-range chunk source (the reference's
-  exact S1/S2 split rule) instead of the newline-aligned text
-  source — same result, different partitioning.
+  sort, single merged text file. ``--chunked`` scans the reference's
+  space-aligned 100 KiB byte-range chunks (its exact S1/S2 split
+  rule) instead of newline-aligned splits — same result, different
+  partitioning. The chunked scan is Spark's own text source with a
+  space record delimiter, run under a 100 KiB split size: Hadoop's
+  line reader realigns each split exactly as the reference's worker
+  does, so the plan holds no Python worker.
 - ``replicate IN... -o DIR``: the reference's replication demo —
   stream the word-count result through the checkpointed
   exactly-once keyed upsert sink (R3/R6/K4) and print the final
-  row count.
+  row count. Exits nonzero if the stream does not finish in time.
 - ``query NAME [--sf DIR] [-n N]``: run any registered analytics
   query against a testdata directory and print N rows.
 - ``sql "SELECT ..." [--sf DIR] [-n N]``: register every testdata
   parquet table (region nation customer supplier part orders
   lineitem events documents embeddings) as a temp view and run
   arbitrary Spark SQL — the ad-hoc surface of the engine.
+
+``--cores N`` sets the local core count; by default
+``$SPARK_GRAFT_CPUS`` applies, else every core.
 """
 
 from __future__ import annotations
@@ -40,39 +46,55 @@ import argparse
 import sys
 
 
-def _spark(cores: int):
+def _spark(cores: int | None):
     from distributed_mapreduce_p2p_spark.session import get_spark
 
     return get_spark(app_name="dmrp2p-cli", cores=cores)
 
 
 def _read(spark, paths, chunked: bool):
-    """Scan the corpus; always emit a single ``value`` text column
-    (the chunk source names its payload ``text``)."""
+    """Scan the corpus into one ``value`` text column: newline
+    records, or with ``chunked`` space-delimited records. Run the
+    action inside ``_split_scope`` so chunked splits follow the
+    reference's 100 KiB grid."""
     from distributed_mapreduce_p2p_spark.sources import io as IO
 
-    if chunked:
-        df = IO.read_text_chunks_space_aligned(spark, paths)
-        return df.select(df["text"].alias("value"))
-    return IO.read_text_corpus(spark, paths)
+    return IO.read_text_corpus(spark, paths, " " if chunked else None)
 
 
-def cmd_wordcount(args) -> int:
+def _split_scope(spark, chunked: bool):
+    """The reference's 100 KiB split size for a chunked scan (restored
+    on exit); no override otherwise."""
+    from contextlib import nullcontext
+
+    from distributed_mapreduce_p2p_spark.sources import io as IO
+
+    if not chunked:
+        return nullcontext()
+    return IO.files_split_size(spark, IO.REFERENCE_CHUNK_BYTES)
+
+
+def _wordcount_df(spark, paths, chunked: bool, top: int = 0):
+    """The ``wordcount`` result in print order: by word, or the top-K
+    by count."""
     from pyspark.sql import functions as F
 
     from distributed_mapreduce_p2p_spark.operators import text as T
 
-    spark = _spark(args.cores)
-    docs = _read(spark, args.inputs, args.chunked)
-    # the text/chunk sources emit a `value` column; tokenize with the
-    # reference's Unicode-letter rule so output is byte-identical to
-    # its golden mr-out-final
+    docs = _read(spark, paths, chunked)
+    # tokenize with the reference's Unicode-letter rule so output is
+    # byte-identical to its golden mr-out-final
     wc = T.word_count(docs, "value", sep=T.TOKEN_SEP_UNICODE)
-    if args.top:
-        wc = wc.orderBy(F.col("cnt").desc(), "word").limit(args.top)
-    else:
-        wc = wc.orderBy("word")
-    rows = wc.collect()
+    if top:
+        return wc.orderBy(F.col("cnt").desc(), "word").limit(top)
+    return wc.orderBy("word")
+
+
+def cmd_wordcount(args) -> int:
+    spark = _spark(args.cores)
+    wc = _wordcount_df(spark, args.inputs, args.chunked, args.top)
+    with _split_scope(spark, args.chunked):
+        rows = wc.collect()
     with open(args.output, "w") as fh:
         for r in rows:
             fh.write(f"{r[0]} {r[1]}\n")
@@ -80,7 +102,12 @@ def cmd_wordcount(args) -> int:
     return 0
 
 
+#: Seconds ``replicate`` waits for its stream to drain.
+REPLICATE_TIMEOUT_S = 300
+
+
 def cmd_replicate(args) -> int:
+    import shutil
     import tempfile
 
     from distributed_mapreduce_p2p_spark.operators import text as T
@@ -92,22 +119,33 @@ def cmd_replicate(args) -> int:
     docs = _read(spark, args.inputs, args.chunked)
     wc = T.word_count(docs, "value", sep=T.TOKEN_SEP_UNICODE)
     tmp = tempfile.mkdtemp(prefix="dmrp2p-repl-")
-    staged = f"{tmp}/staged"
-    wc.write.parquet(staged)
-    sink = KeyedParquetSink(args.output, key="word")
-    q = (
-        spark.readStream.schema(wc.schema)
-        .parquet(staged)
-        .writeStream.foreachBatch(sink.upsert_batch)
-        .outputMode("update")
-        .option("checkpointLocation", f"{tmp}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    n = sink.read(spark).count()
-    print(f"replicated {n} rows -> {args.output}")
-    return 0
+    try:
+        staged = f"{tmp}/staged"
+        with _split_scope(spark, args.chunked):
+            wc.write.parquet(staged)
+        sink = KeyedParquetSink(args.output, key="word")
+        q = (
+            spark.readStream.schema(wc.schema)
+            .parquet(staged)
+            .writeStream.foreachBatch(sink.upsert_batch)
+            .outputMode("update")
+            .option("checkpointLocation", f"{tmp}/ckpt")
+            .trigger(availableNow=True)
+            .start()
+        )
+        if not q.awaitTermination(REPLICATE_TIMEOUT_S):
+            q.stop()
+            print(
+                f"error: replication stream did not finish within "
+                f"{REPLICATE_TIMEOUT_S} s; {args.output} is incomplete",
+                file=sys.stderr,
+            )
+            return 1
+        n = sink.read(spark).count()
+        print(f"replicated {n} rows -> {args.output}")
+        return 0
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def cmd_query(args) -> int:
@@ -188,14 +226,16 @@ def cmd_maintain(args) -> int:
 
 def main(argv: list[str] | None = None) -> int:
     p = argparse.ArgumentParser(prog="distributed_mapreduce_p2p_spark")
-    p.add_argument("--cores", type=int, default=8)
+    p.add_argument("--cores", type=int, default=None,
+                   help="local cores (default: $SPARK_GRAFT_CPUS, else all)")
     sub = p.add_subparsers(dest="cmd", required=True)
 
     w = sub.add_parser("wordcount", help="reference query: sorted word count")
     w.add_argument("inputs", nargs="+")
     w.add_argument("-o", "--output", required=True)
     w.add_argument("--chunked", action="store_true",
-                   help="scan via space-aligned 100KiB byte-range chunks")
+                   help="scan space-delimited records over 100KiB byte-range"
+                   " splits (the reference's chunking); same output")
     w.add_argument("--top", type=int, default=0,
                    help="emit only the top-K words by count")
     w.set_defaults(fn=cmd_wordcount)
@@ -204,7 +244,8 @@ def main(argv: list[str] | None = None) -> int:
                        help="stream the result through the upsert sink")
     r.add_argument("inputs", nargs="+")
     r.add_argument("-o", "--output", required=True)
-    r.add_argument("--chunked", action="store_true")
+    r.add_argument("--chunked", action="store_true",
+                   help="scan as wordcount --chunked does")
     r.set_defaults(fn=cmd_replicate)
 
     q = sub.add_parser("query", help="run a registered analytics query")

@@ -144,13 +144,18 @@ def load_tables(
     return out
 
 
-def read_text_corpus(spark: SparkSession, paths: list[str] | str) -> DataFrame:
-    """Line-oriented scan of a raw text corpus (S1+S2+J1).
+def read_text_corpus(
+    spark: SparkSession,
+    paths: list[str] | str,
+    delimiter: str | None = None,
+) -> DataFrame:
+    """Record-oriented scan of a raw text corpus (S1+S2+J1) into one
+    ``value`` column.
 
     Spark's text source does boundary-aligned splits at newline
-    granularity (the reference aligns at spaces —
-    mapreduce/worker.go:37-89). Multi-path read is the union-all of
-    per-file scans (J1, mrsequential.go:104-105).
+    granularity by default; ``delimiter`` (Spark's ``lineSep``)
+    replaces the newline as the record separator. Multi-path read is
+    the union-all of per-file scans (J1, mrsequential.go:104-105).
 
     To reproduce the reference's 100 KiB byte-range chunking
     (chunks/chunks.go:10) as FileScan split granularity, execute the
@@ -159,8 +164,19 @@ def read_text_corpus(spark: SparkSession, paths: list[str] | str) -> DataFrame:
     is consulted at action planning time, so setting it here and
     restoring would be a no-op and leaving it set would leak into
     every later scan in the session.
+
+    With ``delimiter=" "`` inside that scope this is the reference's
+    space-aligned chunk scan (mapreduce/worker.go:37-89) in the JVM:
+    each task reads one grid range, and Hadoop's line reader skips a
+    split's partial first record and reads past the split end to
+    finish its last one — the rule ``read_aligned_range`` applies — so
+    every byte is read once and no token is split. The CLI's
+    ``--chunked`` word count runs this scan.
     """
-    return spark.read.option("wholetext", "false").text(paths)
+    reader = spark.read.option("wholetext", "false")
+    if delimiter is not None:
+        reader = reader.option("lineSep", delimiter)
+    return reader.text(paths)
 
 
 def read_aligned_range(
@@ -212,8 +228,7 @@ def read_text_chunks_space_aligned(
     delimiter, and keeps reading past its end e until the next
     delimiter (or EOF). Every byte lands in exactly one chunk and no
     token is ever split — the same guarantee Spark's text source
-    gives at newline granularity, reproduced here at arbitrary
-    single-byte delimiters.
+    gives per split at its ``lineSep`` delimiter.
 
     Distributed by construction: the driver touches only file
     *metadata* (one listing); each (path, start, end) range row is a
@@ -226,6 +241,15 @@ def read_text_chunks_space_aligned(
     Returns one row per chunk: (path, chunk_id, start, end, text)
     where [start, end) is the *grid* range; ``text`` is the aligned
     payload.
+
+    This is the chunk-*payload* API: use it when a caller needs each
+    chunk's identity and text. The payloads run through a pandas UDF
+    on Python workers. For a token-level scan, the same tokens come
+    from ``read_text_corpus(spark, paths, delimiter=" ")`` executed
+    inside ``files_split_size(spark, REFERENCE_CHUNK_BYTES)``:
+    Hadoop's line reader applies this boundary rule per split, with
+    no Python in the plan. The CLI's ``--chunked`` word count uses
+    that scan, not this one.
     """
     import os
     import re

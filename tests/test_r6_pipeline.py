@@ -1728,7 +1728,8 @@ def test_cli_maintain_roundtrip(spark, tmp_path):
     base = spark.range(2000).withColumnRenamed("id", "k")
     IO.publish_atomic(base.limit(50), root)
     IO.publish_atomic(base.repartition(8), root, expected_version=1)
-    assert main(["maintain", root, "--keep", "1"]) == 0
+    # --cores 8 keeps the shared test session's shuffle width
+    assert main(["--cores", "8", "maintain", root, "--keep", "1"]) == 0
     m = IO.read_manifest(root)
     assert m["version"] == 3 and len(m["files"]) == 1
     out = IO.read_published(spark, root)
