@@ -17,14 +17,17 @@ tests/test_reference_golden.py::test_cli_wordcount_matches_golden).
 Subcommands:
 
 - ``wordcount IN... -o OUT``: tokenize on non-letters (the
-  reference's ``FieldsFunc(unicode.IsLetter)`` rule), count, global
-  sort, single merged text file. ``--chunked`` scans the reference's
-  space-aligned 100 KiB byte-range chunks (its exact S1/S2 split
-  rule) instead of newline-aligned splits — same result, different
-  partitioning. The chunked scan is Spark's own text source with a
-  space record delimiter, run under a 100 KiB split size: Hadoop's
-  line reader realigns each split exactly as the reference's worker
-  does, so the plan holds no Python worker.
+  reference's ``FieldsFunc(unicode.IsLetter)`` rule), count, collect
+  the counts and sort them on the driver by word (the driver writes
+  every row anyway, so a Spark-side global sort would only add a
+  range-partition sample and an exchange), single merged text file.
+  ``--chunked`` scans the reference's space-aligned 100 KiB
+  byte-range chunks (its exact S1/S2 split rule) instead of
+  newline-aligned splits — same result, different partitioning.
+  The chunked scan is Spark's own text source with a space record
+  delimiter, run under a 100 KiB split size: Hadoop's line reader
+  realigns each split exactly as the reference's worker does, so the
+  plan holds no Python worker.
 - ``replicate IN... -o DIR``: the reference's replication demo —
   stream the word-count result through the checkpointed
   exactly-once keyed upsert sink (R3/R6/K4) and print the final
@@ -75,8 +78,8 @@ def _split_scope(spark, chunked: bool):
 
 
 def _wordcount_df(spark, paths, chunked: bool, top: int = 0):
-    """The ``wordcount`` result in print order: by word, or the top-K
-    by count."""
+    """The ``wordcount`` result: unordered (``cmd_wordcount`` sorts the
+    collected rows by word), or the top-K by count in print order."""
     from pyspark.sql import functions as F
 
     from distributed_mapreduce_p2p_spark.operators import text as T
@@ -87,7 +90,7 @@ def _wordcount_df(spark, paths, chunked: bool, top: int = 0):
     wc = T.word_count(docs, "value", sep=T.TOKEN_SEP_UNICODE)
     if top:
         return wc.orderBy(F.col("cnt").desc(), "word").limit(top)
-    return wc.orderBy("word")
+    return wc
 
 
 def cmd_wordcount(args) -> int:
@@ -95,6 +98,10 @@ def cmd_wordcount(args) -> int:
     wc = _wordcount_df(spark, args.inputs, args.chunked, args.top)
     with _split_scope(spark, args.chunked):
         rows = wc.collect()
+    if not args.top:
+        # words are unique after the groupBy, and Python's code-point
+        # order is Spark's UTF-8 binary string order
+        rows.sort(key=lambda r: r[0])
     with open(args.output, "w") as fh:
         for r in rows:
             fh.write(f"{r[0]} {r[1]}\n")

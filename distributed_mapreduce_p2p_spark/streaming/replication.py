@@ -24,10 +24,12 @@ pointer (the fixture-faithful analog of the reference rewriting
 
 from __future__ import annotations
 
+import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 RESULT_SCHEMA = "id long, word string, cnt long"
 
@@ -60,21 +62,53 @@ def rate_replication_stream(
     return ids.join(F.broadcast(result), "id")
 
 
+def _written_schema(df: DataFrame) -> str:
+    """``df``'s schema as Parquet inference reads it back, as JSON:
+    Spark writes every field nullable (arrays and maps included)."""
+
+    def nullable(node):
+        if isinstance(node, dict):
+            return {
+                k: True
+                if k in ("nullable", "containsNull", "valueContainsNull")
+                else nullable(v)
+                for k, v in node.items()
+            }
+        if isinstance(node, list):
+            return [nullable(v) for v in node]
+        return node
+
+    return json.dumps(nullable(df.schema.jsonValue()))
+
+
 class KeyedParquetSink:
     """R3+R6: idempotent keyed upsert sink — the Spark analog of the
     reference's id→value checkpoint file (dumpDataToFile,
     replication/replication.go:463-494).
 
-    foreachBatch is at-least-once; the upsert (keep-last per id) makes
+    foreachBatch is at-least-once; the upsert (keep-last per key) makes
     replay idempotent — together with the source checkpoint this
     yields exactly-once sink contents.
+
+    Merge: one aggregation, one shuffle, no join. The live version and
+    the batch are tagged ``_new`` = false / true, unioned by name and
+    grouped by key; ``max_by(struct(<non-key cols>), _new)`` keeps the
+    batch's row over the live one. A key repeated inside one batch
+    keeps any one of its rows (as ``dropDuplicates`` does). Grouping
+    treats a null key as one key, so a null-keyed row is upserted like
+    any other, never piled up. The first commit is
+    ``batch.dropDuplicates([key])``.
 
     Durability: Delta-style version pointer. Each upsert writes a new
     versioned directory, then atomically repoints a CURRENT file
     (``os.replace`` — a single atomic step, so a kill at ANY moment
     leaves the previous consistent version readable; the earlier
     double-directory-rename design had a window where the sink
-    vanished). Parquet stand-in for a real Delta/Iceberg MERGE.
+    vanished). CURRENT holds two lines, the version directory's name
+    and the version's schema as JSON, so ``read`` never runs Parquet
+    schema inference (a Spark job per read); a one-line CURRENT (no
+    schema) still reads, by inference. Parquet stand-in for a real
+    Delta/Iceberg MERGE.
     """
 
     def __init__(self, path: str, key: str = "id"):
@@ -82,23 +116,31 @@ class KeyedParquetSink:
         self.key = key
         os.makedirs(path, exist_ok=True)
 
-    def _current(self) -> str | None:
+    def _current(self) -> tuple[str, StructType | None] | None:
+        """The live version directory and its schema from CURRENT (None
+        for a one-line pointer); None when nothing is committed."""
         ptr = os.path.join(self.path, "CURRENT")
         try:
             with open(ptr) as fh:
-                name = fh.read().strip()
+                name, _, schema = fh.read().partition("\n")
         except FileNotFoundError:
             return None
-        d = os.path.join(self.path, name)
-        return d if os.path.isdir(d) else None
+        d = os.path.join(self.path, name.strip())
+        if not os.path.isdir(d):
+            return None
+        return d, (
+            StructType.fromJson(json.loads(schema)) if schema.strip() else None
+        )
 
     def version_count(self) -> int:
-        """Number of committed upserts so far (monotonic batch ids —
-        used by callers to wait for progress)."""
+        """1 + the batch id of the live version, 0 when none is
+        committed. Monotonic in the batch id (callers wait on it for
+        progress); it is not a count of upserts — a seed commit with
+        batch id -1 (as CdcParquetSink callers make) also gives 0."""
         cur = self._current()
         if cur is None:
             return 0
-        return 1 + int(os.path.basename(cur)[1:].split("_")[0])
+        return 1 + int(os.path.basename(cur[0])[1:].split("_")[0])
 
     def read(self, spark: SparkSession) -> DataFrame | None:
         """Current sink contents; None only when no version was ever
@@ -110,18 +152,25 @@ class KeyedParquetSink:
         cur = self._current()
         if cur is None:
             return None
-        return spark.read.parquet(cur)
+        vdir, schema = cur
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        return reader.parquet(vdir)
 
     def upsert_batch(self, batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        current = self.read(spark)
-        new = batch.dropDuplicates([self.key])
-        merged = (
-            current.join(new.select(self.key), self.key, "left_anti").unionByName(new)
-            if current is not None
-            else new
+        current = self.read(batch.sparkSession)
+        if current is None:
+            self._commit(batch.dropDuplicates([self.key]), batch_id)
+            return
+        values = [c for c in batch.columns if c != self.key]
+        latest = (
+            current.withColumn("_new", F.lit(False))
+            .unionByName(batch.withColumn("_new", F.lit(True)))
+            .groupBy(self.key)
+            .agg(F.max_by(F.struct(*values), "_new").alias("_row"))
         )
-        self._commit(merged, batch_id)
+        self._commit(
+            latest.select(self.key, "_row.*").select(*batch.columns), batch_id
+        )
 
     #: committed versions retained besides the live one. ≥1 so a
     #: CONCURRENT reader that resolved CURRENT just before a commit
@@ -148,7 +197,7 @@ class KeyedParquetSink:
         merged.write.mode("overwrite").parquet(vdir)
         tmp_ptr = os.path.join(self.path, f".CURRENT.{os.getpid()}")
         with open(tmp_ptr, "w") as fh:
-            fh.write(os.path.basename(vdir))
+            fh.write(f"{os.path.basename(vdir)}\n{_written_schema(merged)}")
         os.replace(tmp_ptr, os.path.join(self.path, "CURRENT"))  # atomic
         keep = os.path.basename(vdir)
         versions = sorted(

@@ -30,3 +30,29 @@ def spark():
         },
     )
     yield spark
+
+
+@pytest.fixture
+def count_jobs(spark):
+    """``with count_jobs() as n: ...`` runs the block under a fresh job
+    group; afterwards ``n[0]`` is the number of Spark jobs it launched
+    (read from the status tracker once the listener bus is drained)."""
+    import contextlib
+    import uuid
+
+    sc = spark.sparkContext
+
+    @contextlib.contextmanager
+    def counter():
+        group = f"count_jobs-{uuid.uuid4().hex}"
+        n: list[int] = []
+        sc.setJobGroup(group, group)
+        try:
+            yield n
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+            sc._jsc.sc().listenerBus().waitUntilEmpty()  # noqa: SLF001
+            n.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+
+    return counter

@@ -89,19 +89,35 @@ def test_corpus_covers_the_chunk_boundary_cases(tmp_path):
     assert len(tiny) < C
 
 
-def test_cli_wordcount_matches_counter_oracle(spark, tmp_path):
-    """Both scan paths print the oracle's bytes, and the chunked path's
-    100 KiB split size does not outlive the command."""
+def test_cli_wordcount_matches_counter_oracle(spark, tmp_path, monkeypatch,
+                                             count_jobs):
+    """Both scan paths print the oracle's bytes in 2 Spark jobs (the
+    count's shuffle and the collect: the driver sorts the collected
+    rows, so no range-partition sample or exchange runs), and the
+    chunked path's 100 KiB split size does not outlive the command."""
     paths, expected = write_corpus(tmp_path)
     prev = spark.conf.get(_SPLIT_CONF)
+    DataFrame = type(spark.range(1))  # the session's concrete class
+    collected, real_collect = [], DataFrame.collect
+
+    def collect(self):
+        collected.append(self)
+        return real_collect(self)
+
+    monkeypatch.setattr(DataFrame, "collect", collect)
     for flags in ([], ["--chunked"]):
         out = str(tmp_path / f"wc{len(flags)}.txt")
         # --cores 8 keeps the shared test session's shuffle width
-        assert cli.main(["--cores", "8", "wordcount", *paths, "-o", out,
-                         *flags]) == 0
+        with count_jobs() as n:
+            assert cli.main(["--cores", "8", "wordcount", *paths, "-o", out,
+                             *flags]) == 0
         with open(out, encoding="utf-8") as fh:
             assert fh.read() == expected, flags
         assert spark.conf.get(_SPLIT_CONF) == prev
+        assert n[0] == 2, flags
+        qe = collected[-1]._jdf.queryExecution()  # noqa: SLF001
+        plan = qe.executedPlan().toString()
+        assert "rangepartitioning" not in plan.lower(), plan
 
 
 def test_chunked_scan_has_one_partition_per_grid_range(spark, tmp_path):
