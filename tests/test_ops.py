@@ -725,7 +725,7 @@ def test_audit_explode_broadcasts_flag_plan():
     sys.path.insert(
         0, str(Path(__file__).resolve().parent.parent / "tools")
     )
-    from audit_explode_broadcasts import flag_plan
+    from audit_plans import exploded_fact_broadcasts as flag_plan
 
     bad = (
         "BroadcastExchange HashedRelationBroadcastMode, [plan_id=1]\n"
@@ -762,3 +762,209 @@ def test_audit_explode_broadcasts_flag_plan():
         "[/x/embeddings.parquet]"
     )
     assert flag_plan(py), "mapInPandas-fed fact broadcast must flag"
+
+
+def test_audit_hinted_broadcasts_flag_plan():
+    """The hinted-broadcast classifier, pinned on synthetic hint-only
+    plans: a hinted fact broadcast with no aggregate or slice is
+    FLAGGED (the r8 ivf_recall_curve class); an aggregate above the
+    scan, one comparison Filter per fact scan, or a plain dimension
+    broadcast all pass."""
+    import sys
+    from pathlib import Path
+
+    sys.path.insert(
+        0, str(Path(__file__).resolve().parent.parent / "tools")
+    )
+    from audit_plans import hinted_fact_broadcasts as flag_plan
+
+    bad = (
+        "BroadcastExchange HashedRelationBroadcastMode, [plan_id=1]\n"
+        "+- Project [l_orderkey#1L, l_quantity#2]\n"
+        "   +- FileScan parquet [l_orderkey#1L,l_quantity#2] Location: "
+        "[/x/lineitem.parquet]"
+    )
+    assert flag_plan(bad), "unbounded hinted fact broadcast must flag"
+    agg = bad.replace(
+        "+- Project [l_orderkey#1L, l_quantity#2]",
+        "+- HashAggregate(keys=[l_orderkey#1L], functions=[sum(q#2)])",
+    )
+    assert not flag_plan(agg), "an aggregate above the scan bounds it"
+    sliced = bad.replace(
+        "+- Project [l_orderkey#1L, l_quantity#2]",
+        "+- Filter (isnotnull(l_quantity#2) AND (l_quantity#2 > 45))",
+    )
+    assert not flag_plan(sliced), "a comparison Filter is a slice"
+    # one Filter per fact scan: a join of two fact scans with only one
+    # of them sliced still ships the other whole
+    two = (
+        "BroadcastExchange HashedRelationBroadcastMode, [plan_id=2]\n"
+        "+- SortMergeJoin [o_orderkey#3L], [l_orderkey#1L], Inner\n"
+        "   :- Filter (o_orderdate#4 < 1995-01-01)\n"
+        "   :  +- FileScan parquet [o_orderkey#3L,o_orderdate#4] "
+        "Location: [/x/orders.parquet]\n"
+        "   +- FileScan parquet [l_orderkey#1L] Location: "
+        "[/x/lineitem.parquet]"
+    )
+    assert flag_plan(two), "one slice for two fact scans must flag"
+    both = two.replace(
+        "   +- FileScan parquet [l_orderkey#1L]",
+        "   +- Filter (l_quantity#2 > 45)\n"
+        "      +- FileScan parquet [l_orderkey#1L]",
+    )
+    assert not flag_plan(both), "every fact scan sliced passes"
+    dim = (
+        "BroadcastExchange HashedRelationBroadcastMode, [plan_id=3]\n"
+        "+- FileScan parquet [n_nationkey#0L] Location: "
+        "[/x/nation.parquet]"
+    )
+    assert not flag_plan(dim), "a dimension broadcast is not this class"
+
+
+def test_audit_hint_only_replan(spark, tmp_path):
+    """The sweep's hint-only re-plan on a real join: a tmp
+    lineitem.parquet on the build side of a LEFT join to a tiny table.
+    Under the session config the fact side is auto-broadcast; the
+    re-plan of the SAME already-planned DataFrame drops that
+    broadcast (so it is not flagged) and keeps a `broadcast()`-hinted
+    one (flagged); autoBroadcastJoinThreshold is restored."""
+    import sys
+    from pathlib import Path
+
+    from pyspark.sql.functions import broadcast
+
+    from distributed_mapreduce_p2p_spark.plans.explain import explain_str
+    from distributed_mapreduce_p2p_spark.sources.io import scoped_conf
+
+    sys.path.insert(
+        0, str(Path(__file__).resolve().parent.parent / "tools")
+    )
+    from audit_plans import hint_only_plan, hinted_fact_broadcasts
+
+    path = str(tmp_path / "lineitem.parquet")
+    spark.range(200).selectExpr(
+        "id AS l_orderkey", "id % 5 AS l_nk"
+    ).write.parquet(path)
+    fact = spark.read.parquet(path)
+    dim = spark.createDataFrame(
+        [(i, f"n{i}") for i in range(5)], "n_nk long, n_name string"
+    )
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    before = spark.conf.get(key)
+    # the sweep's session plans with metadata truncation off, so the
+    # scan's Location keeps the table name at any tmp path length
+    with scoped_conf(spark, "spark.sql.maxMetadataStringLength", "100000"):
+        plain = dim.join(fact, dim.n_nk == fact.l_nk, "left")
+        hinted = dim.join(broadcast(fact), dim.n_nk == fact.l_nk, "left")
+        assert hinted_fact_broadcasts(explain_str(plain, "simple")), (
+            "precondition: the session config auto-broadcasts the fact"
+        )
+        assert not hinted_fact_broadcasts(hint_only_plan(spark, plain))
+        assert hinted_fact_broadcasts(hint_only_plan(spark, hinted))
+    assert spark.conf.get(key) == before
+
+
+def test_plan_gate_stamp_marks_dirty_tree(tmp_path, monkeypatch):
+    """plan_gate stamps its cached snapshot with HEAD and whether the
+    tree is dirty (`git status --porcelain` non-empty); refresh reuses
+    only a clean stamp at the current HEAD and takes a fresh snapshot
+    for a dirty, stamp-less or other-HEAD cache. `_fresh_snapshot` is
+    stubbed, so no Spark runs."""
+    import json
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    sys.path.insert(
+        0, str(Path(__file__).resolve().parent.parent / "tools")
+    )
+    import plan_gate
+    import plan_identity
+
+    def git(*args):
+        subprocess.run(
+            ["git", "-C", str(tmp_path), "-c", "user.name=t",
+             "-c", "user.email=t@t", *args],
+            check=True, capture_output=True,
+        )
+
+    git("init", "-q")
+    (tmp_path / "f").write_text("x")
+    git("add", "f")
+    git("commit", "-qm", "c")
+    monkeypatch.setattr(plan_gate, "REPO", tmp_path)
+    monkeypatch.setattr(plan_gate, "SNAPSHOT", tmp_path / "snap.json")
+    monkeypatch.setattr(plan_gate, "LAST", tmp_path / "last.json")
+    fresh = []
+
+    def fake_snapshot(path):
+        fresh.append(path)
+        plan_identity.write_snapshot(path, {"q": "fresh"})
+
+    monkeypatch.setattr(plan_gate, "_fresh_snapshot", fake_snapshot)
+
+    clean = plan_gate._stamp()
+    assert clean["dirty"] is False and len(clean["head"]) == 40
+
+    def refresh_from(cached):
+        fresh.clear()
+        plan_gate.LAST.write_text(json.dumps(cached))
+        assert plan_gate.refresh() == 0
+        assert not plan_gate.LAST.exists()
+        return json.loads(plan_gate.SNAPSHOT.read_text()), bool(fresh)
+
+    plans = {"q": "cached"}
+    assert refresh_from({**clean, "plans": plans}) == (plans, False)
+    for stale in (
+        {**clean, "dirty": True, "plans": plans},
+        {"head": clean["head"], "plans": plans},  # stamp-less
+        {"head": "0" * 40, "dirty": False, "plans": plans},
+        plans,  # legacy bare dict
+    ):
+        assert refresh_from(stale) == ({"q": "fresh"}, True), stale
+
+    # check() on the now-dirty tree (untracked snap.json) stamps it
+    # dirty, so the refresh after it snapshots afresh
+    assert plan_gate._stamp() == {**clean, "dirty": True}
+    plan_identity.write_snapshot(plan_gate.SNAPSHOT, {"q": "fresh"})
+    assert plan_gate.check() == 0
+    assert json.loads(plan_gate.LAST.read_text())["dirty"] is True
+    assert refresh_from(json.loads(plan_gate.LAST.read_text()))[1]
+
+
+def test_plan_snapshot_paths_write_the_same_bytes(tmp_path, monkeypatch):
+    """`plan_identity.py snapshot` and `plan_gate refresh`'s cached
+    path serialize through one writer: the same dict gives the same
+    bytes, in the committed PLAN_SNAPSHOT.json format (indent=1), so
+    refresh never reformats the baseline."""
+    import json
+    import sys
+    from pathlib import Path
+
+    repo = Path(__file__).resolve().parent.parent
+    sys.path.insert(0, str(repo / "tools"))
+    import plan_gate
+    import plan_identity
+
+    plans = {"q_b": "Project [a#]\n+- Scan", "q_a": "Filter — é"}
+    direct = tmp_path / "direct.json"
+    monkeypatch.setattr(plan_identity, "plan_all", lambda names: plans)
+    monkeypatch.setattr(
+        sys, "argv", ["plan_identity.py", "snapshot", str(direct)]
+    )
+    plan_identity.main()
+
+    stamp = {"head": "a" * 40, "dirty": False}
+    monkeypatch.setattr(plan_gate, "_stamp", lambda: stamp)
+    monkeypatch.setattr(plan_gate, "SNAPSHOT", tmp_path / "gate.json")
+    monkeypatch.setattr(plan_gate, "LAST", tmp_path / "last.json")
+    plan_gate.LAST.write_text(json.dumps({**stamp, "plans": plans}))
+    assert plan_gate.refresh() == 0
+
+    assert direct.read_bytes() == plan_gate.SNAPSHOT.read_bytes()
+    committed = repo / "PLAN_SNAPSHOT.json"
+    rewritten = tmp_path / "committed.json"
+    plan_identity.write_snapshot(
+        rewritten, json.loads(committed.read_text())
+    )
+    assert rewritten.read_bytes() == committed.read_bytes()

@@ -10,7 +10,7 @@ exactly the queries whose parity the driver re-hashes this round,
 including every plan-changed and new entry per the standing window
 rule — plus the full-registry sweep when SPARK_GRAFT_FULL_SUITE=1
 (the builder's round-close path; `tools/driver_sim.py --all` and
-`tools/sweep_oracles.py` cover the same ground out-of-suite)."""
+`tools/parity_one.py` cover the same ground out-of-suite)."""
 
 from __future__ import annotations
 

@@ -1243,7 +1243,7 @@ def test_broadcast_hint_args_closed_set():
     top-k slice, a quantile/centroid/sketch grid, or the tiny
     block-pair index. This closes the gap neither runtime audit can
     see: a hint inside a localCheckpoint'ed subtree never reaches a
-    visible plan (tools/audit_hinted_broadcasts.py header), but it
+    visible plan (tools/audit_plans.py header), but it
     still forces an SF-scaled build side when the wrapped table
     grows — the r9 wave-2 sweep found two such hidden hints only by
     reading source. r10 hardening: (a) bare names are allowed PER
@@ -1369,7 +1369,7 @@ def test_broadcast_hint_args_closed_set():
         f"NEW broadcast() hint argument(s) {stray} — verify "
         "boundedness (fixed dim / 1-row agg / top-k slice), then add "
         "the (file, arg) here with its reason; SF-scaled tables must "
-        "NOT be hinted (tools/audit_hinted_broadcasts.py header)"
+        "NOT be hinted (tools/audit_plans.py header)"
     )
 
 

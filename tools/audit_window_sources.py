@@ -8,7 +8,7 @@ fact-scale single-partition window there would ship invisible to the
 plan sweep — while the driver's stdout fills with
 ``WARN WindowExec: No Partition Defined``.
 
-Classifier (unit-pinned in tests/test_plans.py): a window spec is
+Classifier (unit-pinned in tests/test_r11_opt.py): a window spec is
 UNPARTITIONED when it is created by
   - ``Window.orderBy(...)`` / ``Window.rowsBetween(...)`` /
     ``Window.rangeBetween(...)`` (order/frame with no partition), or
@@ -215,7 +215,9 @@ def sql_over_empty_sites(source: str) -> list[int]:
     ]
 
 
-def main() -> None:
+def sweep() -> tuple[list[tuple[str, str, str, str]], list[str], int, int]:
+    """Classify every source site against ALLOWED, writing nothing:
+    (report rows, flag messages, site count, function count)."""
     found: dict[tuple[str, str], list[int]] = {}
     sql_sites: list[tuple[str, int]] = []
     for path in sorted(PKG.rglob("*.py")):
@@ -249,7 +251,11 @@ def main() -> None:
     for rel, ln in sql_sites:
         bad.append(f"SQL-string OVER () window at {rel}:{ln}")
         rows.append((rel, "<sql>", str(ln), "FLAGGED — SQL OVER () evades AST"))
+    return rows, bad, sum(len(v) for v in found.values()), len(found)
 
+
+def main() -> None:
+    rows, bad, n_sites, n_funcs = sweep()
     out = [
         "# AUDIT — unpartitioned-window SOURCE sites (closed set)",
         "",
@@ -266,10 +272,9 @@ def main() -> None:
         "|---|---|---|---|",
     ]
     out += [f"| {f} | {fn} | {ls} | {st} |" for f, fn, ls, st in rows]
-    n_sites = sum(len(v) for v in found.values())
     out += [
         "",
-        f"**{n_sites} sites in {len(found)} functions; "
+        f"**{n_sites} sites in {n_funcs} functions; "
         f"{len(bad)} flagged"
         f"{': ' + '; '.join(bad) if bad else ''}.**",
         "",

@@ -6,8 +6,8 @@ since its last driver-sampled CORRECTNESS row must rotate into the
 next round's `registry._FRONT` window — was mechanized for hint
 edits by tools/plan_identity.py in r9, but running it stayed a
 thing the builder had to remember. This tool makes it a standing
-exit code, mirroring how audit_hinted_broadcasts mechanized the
-hint policy:
+exit code, mirroring how the hinted-broadcast audit
+(tools/audit_plans.py) mechanized the hint policy:
 
   check:    take TWO fresh same-code snapshots (subprocesses, so
             each gets its own Spark session — the judge-mode
@@ -20,9 +20,10 @@ hint policy:
             same-code snapshots disagree) are reported and excluded,
             as in judge mode.
   refresh:  rewrite `PLAN_SNAPSHOT.json` from the second snapshot of
-            the check (or fresh if none) — run AFTER check passes at
-            round close, then commit it; it becomes the next round's
-            baseline.
+            the check — reused only when that check ran at the
+            current HEAD on a clean tree, else a fresh snapshot — run
+            AFTER check passes at round close, then commit it; it
+            becomes the next round's baseline.
 
 Bootstrap: if `PLAN_SNAPSHOT.json` does not exist yet, check FAILS
 with instructions to refresh first — a missing baseline must be a
@@ -46,6 +47,7 @@ sys.path.insert(0, str(REPO))
 sys.path.insert(0, str(REPO / "tools"))
 
 SNAPSHOT = REPO / "PLAN_SNAPSHOT.json"
+LAST = REPO / ".plan_gate_last.json"
 
 
 def _fresh_snapshot(path: Path) -> None:
@@ -76,12 +78,12 @@ def check() -> int:
         _fresh_snapshot(a2_p)
         before, a1, a2 = _load(SNAPSHOT), _load(a1_p), _load(a2_p)
         # keep the freshest stable snapshot for a subsequent refresh,
-        # stamped with the HEAD sha so refresh can refuse a snapshot
-        # taken before the code changed (r10 ADVICE: a lingering
-        # .plan_gate_last.json from an older tree would silently
-        # become the committed baseline)
-        (REPO / ".plan_gate_last.json").write_text(
-            json.dumps({"head": _head_sha(), "plans": json.loads(a2_p.read_text())})
+        # stamped with the HEAD sha and the tree state so refresh can
+        # refuse a snapshot of code that is not the committed HEAD
+        # (r10 ADVICE: a lingering .plan_gate_last.json from an older
+        # tree would silently become the committed baseline)
+        LAST.write_text(
+            json.dumps({**_stamp(), "plans": json.loads(a2_p.read_text())})
         )
     from distributed_mapreduce_p2p_spark import registry
 
@@ -138,45 +140,55 @@ def check() -> int:
     return 1 if violations else 0
 
 
-def _head_sha() -> str:
+def _git(*args: str) -> str:
     try:
         return subprocess.run(
-            ["git", "rev-parse", "HEAD"],
-            capture_output=True,
-            text=True,
-            cwd=str(REPO),
+            ["git", *args], capture_output=True, text=True, cwd=str(REPO)
         ).stdout.strip()
     except OSError:
         return ""
 
 
+def _stamp() -> dict:
+    """HEAD sha, and whether the working tree differs from it (any
+    `git status --porcelain` line)."""
+    return {
+        "head": _git("rev-parse", "HEAD"),
+        "dirty": bool(_git("status", "--porcelain")),
+    }
+
+
 def refresh() -> int:
-    last = REPO / ".plan_gate_last.json"
-    if last.exists():
-        cached = json.loads(last.read_text())
+    from plan_identity import write_snapshot
+
+    if LAST.exists():
+        cached = json.loads(LAST.read_text())
         # Provenance check (r10 ADVICE): only reuse the cached
-        # snapshot when it was taken at the CURRENT head — a snapshot
-        # from before the last code change describes a dead tree and
+        # snapshot when it was taken at the CURRENT head on a clean
+        # tree — a snapshot from before the last code change, or of
+        # uncommitted edits, describes a tree that is not HEAD and
         # must not become the committed baseline. Legacy stampless
         # files (a bare plans dict) are treated as stale.
-        head = _head_sha()
+        head = _stamp()["head"]
         if (
             isinstance(cached, dict)
             and cached.get("head")
             and cached["head"] == head
+            and cached.get("dirty") is False
         ):
-            SNAPSHOT.write_text(json.dumps(cached["plans"], indent=1))
-            last.unlink()
+            write_snapshot(SNAPSHOT, cached["plans"])
+            LAST.unlink()
             print(
                 f"PLAN_SNAPSHOT.json refreshed from the last gate "
                 f"check at HEAD {head[:10]} "
                 f"({len(cached['plans'])} plans) — commit it"
             )
             return 0
-        last.unlink()
+        LAST.unlink()
         print(
-            "stale .plan_gate_last.json (taken at a different HEAD or "
-            "unstamped) — discarded; taking a fresh snapshot"
+            "stale .plan_gate_last.json (taken at a different HEAD, on "
+            "a dirty tree, or unstamped) — discarded; taking a fresh "
+            "snapshot"
         )
     _fresh_snapshot(SNAPSHOT)
     print(

@@ -1,10 +1,11 @@
 #!/usr/bin/env python
-"""Capture `.explain("formatted")` for the r10 optimization round.
+"""Capture `.explain("formatted")` for an optimization round.
 
-Usage:  python tools/r10_plan.py before|after QUERY [QUERY ...]
+Usage:  python tools/round_plan.py ROUND before|after QUERY [QUERY ...]
 
-Writes plans/r10/<query>_<tag>.txt at sf0.01 (the PLANS.md showcase
-scale) so the judge can check plan claims without running Spark.
+Writes plans/<ROUND>/<query>_<tag>.txt (e.g. ROUND = r11) at sf0.01
+(the PLANS.md showcase scale) so the judge can check plan claims
+without running Spark.
 """
 
 from __future__ import annotations
@@ -23,19 +24,19 @@ SF = "/root/testdata/sf0.01"
 
 
 def main() -> None:
-    tag = sys.argv[1]
+    rnd, tag = sys.argv[1], sys.argv[2]
     assert tag in ("before", "after"), tag
-    names = sys.argv[2:]
-    out_dir = REPO / "plans" / "r10"
+    names = sys.argv[3:]
+    out_dir = REPO / "plans" / rnd
     out_dir.mkdir(parents=True, exist_ok=True)
-    spark = get_spark(app_name=f"r10_plan_{tag}")
+    spark = get_spark(app_name=f"{rnd}_plan_{tag}")
     spark.sparkContext.setLogLevel("ERROR")
     for name in names:
         df = registry.QUERIES[name](spark, SF)
         text = explain_str(df)
         path = out_dir / f"{name}_{tag}.txt"
         path.write_text(
-            f"== {name} ({tag}, r10 optimization round, sf0.01) ==\n\n"
+            f"== {name} ({tag}, {rnd} optimization round, sf0.01) ==\n\n"
             + text
         )
         print(f"wrote {path}")
