@@ -109,15 +109,15 @@ def cmd_wordcount(args) -> int:
     return 0
 
 
-#: Seconds ``replicate`` waits for its stream to drain.
-REPLICATE_TIMEOUT_S = 300
-
-
 def cmd_replicate(args) -> int:
     import shutil
-    import tempfile
 
     from distributed_mapreduce_p2p_spark.operators import text as T
+    from distributed_mapreduce_p2p_spark.streaming.harness import (
+        STREAM_TIMEOUT_S,
+        run_available_now,
+        scratch_dir,
+    )
     from distributed_mapreduce_p2p_spark.streaming.replication import (
         KeyedParquetSink,
     )
@@ -125,26 +125,24 @@ def cmd_replicate(args) -> int:
     spark = _spark(args.cores)
     docs = _read(spark, args.inputs, args.chunked)
     wc = T.word_count(docs, "value", sep=T.TOKEN_SEP_UNICODE)
-    tmp = tempfile.mkdtemp(prefix="dmrp2p-repl-")
+    tmp = scratch_dir("dmrp2p-repl-")
     try:
         staged = f"{tmp}/staged"
         with _split_scope(spark, args.chunked):
             wc.write.parquet(staged)
         sink = KeyedParquetSink(args.output, key="word")
-        q = (
-            spark.readStream.schema(wc.schema)
-            .parquet(staged)
-            .writeStream.foreachBatch(sink.upsert_batch)
-            .outputMode("update")
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(REPLICATE_TIMEOUT_S):
-            q.stop()
+        try:
+            run_available_now(
+                spark.readStream.schema(wc.schema)
+                .parquet(staged)
+                .writeStream.foreachBatch(sink.upsert_batch)
+                .outputMode("update"),
+                tmp,
+            )
+        except TimeoutError:
             print(
                 f"error: replication stream did not finish within "
-                f"{REPLICATE_TIMEOUT_S} s; {args.output} is incomplete",
+                f"{STREAM_TIMEOUT_S} s; {args.output} is incomplete",
                 file=sys.stderr,
             )
             return 1

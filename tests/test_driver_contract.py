@@ -212,6 +212,8 @@ def test_bench_json_contract():
         cwd=str(REPO),
     )
     assert proc.returncode == 0, proc.stderr[-3000:]
+    if subset:
+        assert "SPARK_GRAFT_BENCH_SUBSET" in proc.stderr  # loud banner
     line = proc.stdout.strip().splitlines()[-1]
     # The driver stores a bounded tail of stdout: the summary line
     # must stay small or the round's BENCH artifact parses as null.
@@ -221,6 +223,7 @@ def test_bench_json_contract():
     assert d["unit"] == "sec" and d["value"] > 0
     assert 0 < len(d["queries"]) <= 10
     assert d["n_queries"] >= (100 if full else subset)
+    assert d["n_failed"] == 0, proc.stderr[-3000:]
     assert all(isinstance(v, (int, float)) for v in d["queries"].values())
     from pathlib import Path
 
@@ -235,6 +238,48 @@ def test_bench_json_contract():
     assert all(
         isinstance(v, int) and v >= 0 for v in detail["jobs"].values()
     )
+    assert detail["errors"] == {}
+
+
+def _bench_module():
+    spec = importlib.util.spec_from_file_location("bench", REPO / "bench.py")
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+def test_bench_isolates_a_failing_query(spark, capsys):
+    """One raising query is reported loudly and costs only its own
+    row; the queries around it are still timed."""
+    def boom(spark, sf_dir):
+        raise RuntimeError("boom\nsecond line")
+
+    queries = {
+        "first": lambda spark, sf_dir: spark.range(3),
+        "bad": boom,
+        "last": lambda spark, sf_dir: spark.range(5),
+    }
+    timings, jobs, errors = _bench_module().time_queries(
+        spark, SF_SMALL, list(queries), queries
+    )
+    assert set(timings) == set(jobs) == {"first", "last"}
+    assert errors == {"bad": "RuntimeError: boom"}
+    assert "bench: FAILED bad: RuntimeError: boom\n" in capsys.readouterr().err
+    assert spark.sparkContext.getLocalProperty("spark.jobGroup.id") is None
+
+
+def test_bench_flags_a_truncated_job_count(spark, capsys, monkeypatch):
+    from pyspark.status import StatusTracker
+
+    monkeypatch.setattr(StatusTracker, "getJobIdsForGroup",
+                        lambda self, group=None: list(range(1000)))
+    queries = {"q": lambda spark, sf_dir: spark.range(3)}
+    timings, jobs, errors = _bench_module().time_queries(
+        spark, SF_SMALL, ["q"], queries
+    )
+    assert "q" in timings and jobs == {"q": 1000}
+    assert "spark.ui.retainedJobs=1000" in errors["q"]
+    assert "bench: WARNING q: job count truncated" in capsys.readouterr().err
 
 
 def test_coverage_doc_names_exist_in_registry():

@@ -13,6 +13,9 @@ Usage: python tools/driver_sim.py [sf_dir] [--all]
 ``--all`` verifies EVERY oracle-backed queries() entry instead of the
 first-50 window — the pre-rotation check that out-of-window queries
 will go green when promoted into a future round's window.
+
+A query that leaves a stream in ``spark.streams.active`` is a FAIL
+row (LEAK); the stream is stopped so the next query starts clean.
 """
 
 from __future__ import annotations
@@ -70,6 +73,12 @@ def main() -> int:
             issues = compare(qs[name](spark, sf_dir), con, osql[name], name)
         except Exception as e:
             issues = [f"{name}: EXC {type(e).__name__}: {e}"]
+        # no query may leave a stream running into the next one
+        leaked = spark.streams.active
+        if leaked:
+            issues.append(f"{name}: LEAK {len(leaked)} active stream(s)")
+            for q in leaked:
+                q.stop()
         print(
             f"[{i + 1}/{total}] {'ok' if not issues else 'FAIL'} {name}"
             f" ({time.time() - t0:.1f}s)",

@@ -68,7 +68,7 @@ _EXPR_ID = re.compile(r"#\d+[L]?")
 _PLAN_ID = re.compile(r"\[(plan_id|id)=#?\d+\]")
 _RDD_ATTRS = re.compile(r"(Scan ExistingRDD(?: \w+)?)\[[^\]]*\]")
 _CODEGEN = re.compile(r"\*\(\d+\) ")
-# streaming queries stage through tempfile.mkdtemp dirs whose random
+# streaming queries stage through scratch_dir temp dirs whose random
 # suffix lands in FileScan Location strings
 _TMP_PATH = re.compile(r"/tmp/[A-Za-z0-9_./=-]*")
 
