@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from distributed_mapreduce_p2p_spark.sources.io import scoped_conf
+
 # ---------------------------------------------------------------- exact
 
 def exact_dedup_groups(docs: DataFrame) -> DataFrame:
@@ -621,12 +623,11 @@ def connected_components(
     # partition; a 100 TB edge list gets its thousands of partitions
     # back from the same formula.
     spark = edges.sparkSession
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        str(min(int(prev_parts), n_edges // 50_000 + 4)),
-    )
-    try:
+    parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    with scoped_conf(
+        spark, "spark.sql.shuffle.partitions",
+        str(min(parts, n_edges // 50_000 + 4)),
+    ):
         for _ in range(max_iter):
             rounds += 1
             edges = _star_round(
@@ -654,8 +655,6 @@ def connected_components(
             )
             if chains.unionAll(multi_parent).isEmpty():
                 break
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     # star forest: every non-root points at its component's min
     labels = (
         nodes.join(edges, nodes["doc_id"] == edges["src"], "left")

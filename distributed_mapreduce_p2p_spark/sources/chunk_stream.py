@@ -8,7 +8,7 @@ Spark-native analog of its *ingest* side: a producer appends
 space-delimited tokens to a file; each microbatch emits the tokens
 that have become COMPLETE (delimiter-terminated) since the last
 checkpointed offset — the same no-split guarantee as the batch
-``chunktext`` source, applied to a moving end-of-file.
+space-aligned chunk scan, applied to a moving end-of-file.
 
     spark.dataSource.register(ChunkTailDataSource)
     stream = (spark.readStream.format("chunktail")
@@ -81,7 +81,7 @@ class ChunkTailStreamReader(SimpleDataSourceStreamReader):
         A token longer than batch_bytes must not livelock the stream:
         if the window holds no delimiter but the file continues past
         it, grow the scan until the next delimiter or EOF (the batch
-        ``chunktext`` source extends past its grid end the same way),
+        chunk scan reads past its split end the same way),
         so the offset is guaranteed to advance whenever a complete
         token exists. Only a genuinely unterminated trailing token
         returns ``start`` — it becomes visible when its delimiter is

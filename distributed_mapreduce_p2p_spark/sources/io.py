@@ -14,7 +14,7 @@ typed parquet readers for the star schema.
 
 from __future__ import annotations
 
-from contextlib import contextmanager
+from contextlib import AbstractContextManager, contextmanager
 from typing import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
@@ -34,37 +34,34 @@ _TIME_COLUMNS = {
 
 
 @contextmanager
-def files_split_size(spark: SparkSession, nbytes: int) -> Iterator[None]:
-    """Scoped override of ``spark.sql.files.maxPartitionBytes`` —
-    saved on entry, restored on exit (no session-wide leak).
+def scoped_conf(spark: SparkSession, key: str, value: str) -> Iterator[None]:
+    """Scoped override of any session conf — saved on entry, restored
+    on exit even when the body throws (no session-wide leak): a key
+    the session had not set is unset again, so the session conf reads
+    exactly as before. Every query-local conf override in the package
+    runs inside this scope."""
+    prev = spark.conf.getAll.get(key)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
+
+
+def files_split_size(
+    spark: SparkSession, nbytes: int
+) -> AbstractContextManager[None]:
+    """Scoped override of ``spark.sql.files.maxPartitionBytes``.
 
     File-source split planning consults this conf when an *action*
     plans the scan, not when the DataFrame is defined (scans are
     lazy); execute (collect/count/localCheckpoint) inside the scope
     for the split size to take effect.
     """
-    key = "spark.sql.files.maxPartitionBytes"
-    prev = spark.conf.get(key)
-    spark.conf.set(key, str(nbytes))
-    try:
-        yield
-    finally:
-        spark.conf.set(key, prev)
-
-
-@contextmanager
-def scoped_conf(spark: SparkSession, key: str, value: str) -> Iterator[None]:
-    """Scoped override of any session conf — saved on entry, restored
-    on exit even when the body throws (no session-wide leak). The
-    ``files_split_size`` pattern, generalized: every query-local
-    ``spark.sql.shuffle.partitions`` override in the registry runs
-    inside this scope."""
-    prev = spark.conf.get(key)
-    spark.conf.set(key, value)
-    try:
-        yield
-    finally:
-        spark.conf.set(key, prev)
+    return scoped_conf(spark, "spark.sql.files.maxPartitionBytes", str(nbytes))
 
 
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -259,18 +256,18 @@ def read_text_chunks_space_aligned(
     # Both the grid builder (os.path.getsize) and the task-side
     # reader (plain open/seek in read_aligned_range) speak the LOCAL
     # filesystem only. On hdfs://, s3a://, abfs://, ... fail loudly
-    # here instead of a confusing worker stack trace — the
-    # production-shaped twin is the ``chunktext`` Python DataSource
-    # (sources/chunk_source.py), which receives ranges through
-    # Spark's own FS-agnostic file listing.
+    # here instead of a confusing worker stack trace, and name the
+    # FS-agnostic token scan: the JVM text source lists and splits
+    # through Hadoop's FileSystem.
     local = []
     for p in paths:
         m = re.match(r"^([a-zA-Z][a-zA-Z0-9+.-]*)://", p)
         if m and m.group(1) != "file":
             raise ValueError(
                 f"read_text_chunks_space_aligned is local-FS-only "
-                f"(got {p!r}); use spark.read.format('chunktext') "
-                f"for {m.group(1)}:// storage"
+                f"(got {p!r}); for {m.group(1)}:// storage use "
+                f"read_text_corpus(spark, paths, delimiter=' ') inside "
+                f"files_split_size(spark, chunk_bytes)"
             )
         local.append(p[7:] if p.startswith("file://") else p)
     paths = local

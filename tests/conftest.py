@@ -25,6 +25,9 @@ def spark():
         cores=8,
         shuffle_partitions=8,
         extra_conf={
+            # a bounded heap: the suite shares its host's memory, and
+            # get_spark's 32g default let the JVM grow past 13 GB RSS
+            "spark.driver.memory": "6g",
             "spark.sql.warehouse.dir": wh,
             "spark.driver.extraJavaOptions": f"-Dderby.system.home={wh}",
         },

@@ -18,7 +18,7 @@ Every allowlisted site is bounded or non-production:
                             caps the collect AND detects overflow;
                             the registered path is the blocked form
 - registry.py               _stage_corpus_txt toLocalIterator
-                            (chunktext demo fixture staging — the
+                            (chunked-scan query's corpus staging — the
                             one adjudicated driver transit) + two
                             1-row scalar argmin picks (graph seeds)
 - __main__.py               CLI result display (user-facing output)

@@ -58,13 +58,15 @@ def test_first_50_window_composition():
     last green rows r2-r4, all proven plan-stable by
     PLAN_SNAPSHOT.json / tools/plan_gate.py, regenerated by
     `python tools/next_window.py --changed simhash_pairs
-    dedup_detector_agreement`). HEAD must be simhash_pairs — the
-    r11 signature-checkpoint plan change whose green row described
-    the superseded double-pipeline plan."""
+    dedup_detector_agreement`). HEAD must be
+    wordcount_chunked_source — its scan moved from a Python
+    DataSource to the JVM text source after round 11, so its
+    r7 green row describes a dead plan."""
     mod = _load_entry()
     head = list(mod.queries())[:50]
-    assert head[0] == "simhash_pairs"
+    assert head[0] == "wordcount_chunked_source"
     must_cover = {
+        "wordcount_chunked_source",
         # plan changed in the r11 OPTIMIZATION round (signature
         # checkpoint; the agreement report composes it)
         "simhash_pairs",
@@ -362,3 +364,91 @@ def test_plan_snapshot_baseline_structure():
         if not isinstance(v, str) or not v or v.startswith("PLAN ERROR")
     )
     assert not errs, f"baseline contains failed plans: {errs}"
+
+
+def test_chunked_source_query_from_foreign_cwd(tmp_path):
+    """``wordcount_chunked_source`` as the contract's consumer runs it:
+    a fresh process in a foreign working directory, ``PYTHONPATH``
+    unset, ``__spark_entry__`` imported by path and a vanilla session.
+    A Python worker would not find the package there, so the scan
+    must run in the JVM to match its oracle."""
+    cwd = tmp_path / "cwd"
+    cwd.mkdir()
+    code = (
+        "import importlib.util, sys\n"
+        "spec = importlib.util.spec_from_file_location(\n"
+        f"    '__spark_entry__', {str(REPO / '__spark_entry__.py')!r})\n"
+        "mod = importlib.util.module_from_spec(spec)\n"
+        "spec.loader.exec_module(mod)\n"
+        "from pyspark.sql import SparkSession\n"
+        "from tests.oracle import compare, duck_con\n"
+        "spark = (SparkSession.builder.master('local[2]')\n"
+        "         .config('spark.driver.memory', '1g')\n"
+        "         .config('spark.ui.enabled', 'false').getOrCreate())\n"
+        "spark.sparkContext.setLogLevel('ERROR')\n"
+        "name = 'wordcount_chunked_source'\n"
+        f"df = mod.queries()[name](spark, {SF_SMALL!r})\n"
+        f"bad = compare(df, duck_con({SF_SMALL!r}), "
+        "mod.oracle_sql()[name], name)\n"
+        "print(bad)\n"
+        "sys.exit(1 if bad else 0)\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    r = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=cwd, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert r.returncode == 0, (r.stdout + r.stderr)[-3000:]
+
+
+def test_chunked_source_query_is_one_jvm_scan(spark, monkeypatch):
+    """The query's scan runs one task per 65536-byte grid range of the
+    staged corpus, no plan it executes holds a Python node, and the
+    split size does not outlive the call."""
+    import math
+    import uuid
+
+    from distributed_mapreduce_p2p_spark import registry
+
+    key = "spark.sql.files.maxPartitionBytes"
+    prev = spark.conf.get(key)
+    DataFrame = type(spark.range(1))  # the session's concrete class
+    executed, real_checkpoint = [], DataFrame.localCheckpoint
+
+    def local_checkpoint(self, *a, **kw):
+        executed.append(self)
+        return real_checkpoint(self, *a, **kw)
+
+    monkeypatch.setattr(DataFrame, "localCheckpoint", local_checkpoint)
+    # stage the corpus outside the counted group
+    corpus = registry._stage_corpus_txt(spark, SF_SMALL)  # noqa: SLF001
+    sc = spark.sparkContext
+    group = f"chunked-source-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        df = registry.QUERIES["wordcount_chunked_source"](spark, SF_SMALL)
+        df.count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()  # noqa: SLF001
+    assert spark.conf.get(key) == prev
+    tracker = sc.statusTracker()
+    tasks = sorted(
+        tracker.getStageInfo(s).numTasks
+        for j in tracker.getJobIdsForGroup(group)
+        for s in tracker.getJobInfo(j).stageIds
+        if tracker.getStageInfo(s) is not None
+    )
+    grid = math.ceil(os.path.getsize(corpus) / 65536)
+    assert grid > 1 and grid in tasks, (grid, tasks)
+
+    plans = [
+        d._jdf.queryExecution().executedPlan().toString()  # noqa: SLF001
+        for d in [*executed, df]
+    ]
+    assert len(plans) == 2
+    assert "FileScan text" in plans[0], plans[0]
+    for plan in plans:
+        for node in ("BatchScan", "Python", "ArrowEvalPython"):
+            assert node not in plan, plan

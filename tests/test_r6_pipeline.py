@@ -59,10 +59,10 @@ def test_maintain_table_lifecycle(spark, tmp_path):
 def test_space_aligned_chunks_reject_remote_uri(spark, tmp_path):
     """The chunk-grid builder and its task-side reader are local-FS
     only; an hdfs:// path must produce the documented error naming
-    the chunktext DataSource, not a worker stack trace."""
+    the FS-agnostic JVM token scan, not a worker stack trace."""
     from distributed_mapreduce_p2p_spark.sources import io as IO
 
-    with pytest.raises(ValueError, match="chunktext"):
+    with pytest.raises(ValueError, match="read_text_corpus.*files_split_size"):
         IO.read_text_chunks_space_aligned(
             spark, "hdfs://nn:8020/corpus/a.txt"
         )

@@ -334,21 +334,30 @@ def test_space_aligned_chunks_survive_giant_tokens(spark, tmp_path):
     """Pathological: tokens longer than the chunk size (a chunk's
     whole range inside one token). The predecessor's read-past-end
     consumes the token; interior chunks must emit nothing rather than
-    duplicate bytes."""
+    duplicate bytes. Both scans keep the rule: the pandas payload API
+    and the JVM text source (``lineSep=" "`` over 100-byte splits)."""
     from collections import Counter
 
     from distributed_mapreduce_p2p_spark.sources.io import (
+        files_split_size,
         read_text_chunks_space_aligned,
+        read_text_corpus,
     )
 
     corpus = " ".join(["x" * 400, "ab", "y" * 990, "c", "z" * 123])
     p = tmp_path / "giant.txt"
     p.write_text(corpus, encoding="utf-8")
+    want = Counter(t for t in corpus.split(" ") if t)
 
     chunks = read_text_chunks_space_aligned(spark, str(p), chunk_bytes=100)
     texts = [r.text for r in chunks.orderBy("chunk_id").collect()]
     got = Counter(t for txt in texts for t in txt.split(" ") if t)
-    want = Counter(t for t in corpus.split(" ") if t)
+    assert got == want
+
+    records = read_text_corpus(spark, str(p), " ")
+    with files_split_size(spark, 100):
+        assert records.rdd.getNumPartitions() > 1
+        got = Counter(r.value for r in records.collect() if r.value)
     assert got == want
 
 
@@ -365,120 +374,12 @@ def test_scoped_conf_restores_on_exception(spark):
             assert spark.conf.get(key) == "3"
             raise RuntimeError("boom")
     assert spark.conf.get(key) == before
-
-
-def test_chunktext_datasource_matches_mapinpandas_scan(spark, tmp_path):
-    """The ``chunktext`` Python DataSource (each space-aligned chunk
-    range is a real InputPartition) must produce exactly the rows of
-    the mapInPandas scan, with one Spark partition per chunk."""
-    from distributed_mapreduce_p2p_spark.sources.chunk_source import (
-        ChunkTextDataSource,
-    )
-    from distributed_mapreduce_p2p_spark.sources.io import (
-        read_table,
-        read_text_chunks_space_aligned,
-    )
-
-    docs = read_table(spark, SF_SMALL, "documents").limit(40)
-    corpus = " ".join(r.text for r in docs.select("text").collect())
-    p = tmp_path / "corpus.txt"
-    p.write_text(corpus, encoding="utf-8")
-
-    spark.dataSource.register(ChunkTextDataSource)
-    ds = (
-        spark.read.format("chunktext")
-        .option("chunk_bytes", 301)
-        .load(str(p))
-    )
-    via_mip = read_text_chunks_space_aligned(spark, str(p), chunk_bytes=301)
-
-    got = {tuple(r) for r in ds.collect()}
-    want = {tuple(r) for r in via_mip.collect()}
-    assert got == want and got
-
-    # chunk ranges are genuine input partitions (scheduler-visible)
-    n_chunks = ds.select("chunk_id").distinct().count()
-    assert ds.rdd.getNumPartitions() == n_chunks
-
-    # and the scan composes with ordinary operators (filter + agg)
-    n_words = (
-        ds.where(F.col("chunk_id") % 2 == 0)
-        .select(F.explode(F.split("text", " ")).alias("w"))
-        .where(F.col("w") != "")
-        .count()
-    )
-    assert n_words > 0
-
-
-def test_chunktext_directory_and_delimiter_branches(spark, tmp_path):
-    """chunktext over a DIRECTORY grids every file inside (sorted,
-    per-file chunk ids), and a custom single-byte delimiter realigns
-    at that byte instead of space. Both branches reconstruct every
-    byte exactly once."""
-    from distributed_mapreduce_p2p_spark.sources.chunk_source import (
-        ChunkTextDataSource,
-    )
-
-    d = tmp_path / "corpus"
-    d.mkdir()
-    texts = {
-        "a.txt": "alpha beta gamma " * 40,
-        "b.txt": "delta epsilon " * 55,
-    }
-    for fn, t in texts.items():
-        (d / fn).write_text(t, encoding="utf-8")
-
-    spark.dataSource.register(ChunkTextDataSource)
-    ds = (
-        spark.read.format("chunktext")
-        .option("chunk_bytes", 97)
-        .load(str(d))
-    )
-    rows = ds.collect()
-    # both files present; per-file byte reconstruction is exact
-    by_path = {}
-    for r in rows:
-        by_path.setdefault(r.path, []).append(r)
-    assert len(by_path) == 2
-    for path, rs in by_path.items():
-        fn = path.rsplit("/", 1)[-1]
-        rs = sorted(rs, key=lambda r: r.chunk_id)
-        # space-aligned chunks: joining on single spaces must give
-        # back the token sequence exactly
-        toks = [w for r in rs for w in r.text.split(" ") if w]
-        want = [w for w in texts[fn].split(" ") if w]
-        assert toks == want, fn
-    # one Spark partition per chunk across BOTH files
-    assert ds.rdd.getNumPartitions() == len(rows)
-
-    # custom delimiter: newline-aligned chunks must never split a line
-    nl = tmp_path / "lines.txt"
-    lines = [f"line{i} with words" for i in range(100)]
-    nl.write_text("\n".join(lines), encoding="utf-8")
-    ds2 = (
-        spark.read.format("chunktext")
-        .option("chunk_bytes", 131)
-        .option("delimiter", "\n")
-        .load(str(nl))
-    )
-    got_lines = [
-        ln
-        for r in sorted(ds2.collect(), key=lambda r: r.chunk_id)
-        for ln in r.text.split("\n")
-        if ln
-    ]
-    assert got_lines == lines
-
-    # multi-byte delimiter is rejected loudly
-    import pytest as _pytest
-
-    with _pytest.raises(Exception, match="single byte"):
-        (
-            spark.read.format("chunktext")
-            .option("delimiter", "ab")
-            .load(str(nl))
-            .collect()
-        )
+    # a key the session had not set is unset again, not pinned
+    unset = "spark.sql.files.openCostInBytes"
+    assert unset not in spark.conf.getAll
+    with scoped_conf(spark, unset, "1"):
+        assert spark.conf.get(unset) == "1"
+    assert unset not in spark.conf.getAll
 
 
 def test_read_table_normalizes_time_encodings(spark, tmp_path):

@@ -14,27 +14,62 @@ Usage: python tools/driver_sim.py [sf_dir] [--all]
 first-50 window — the pre-rotation check that out-of-window queries
 will go green when promoted into a future round's window.
 
+Every run uses a foreign working directory: the process changes
+into a fresh temp dir and drops ``PYTHONPATH`` before it imports
+``__spark_entry__``, so a Python worker that needs the package on its
+path fails here as it does for any consumer that imports the entry
+file by path.
+
 A query that leaves a stream in ``spark.streams.active`` is a FAIL
-row (LEAK); the stream is stopped so the next query starts clean.
+row (LEAK); the stream is stopped so the next query starts clean. A
+query that changes the session conf is a FAIL row (CONF); the conf
+is restored.
 """
 
 from __future__ import annotations
 
+import atexit
 import importlib.util
+import os
+import shutil
 import sys
+import tempfile
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+REPO = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(REPO))
 
 from tests.oracle import compare, duck_con  # noqa: E402
+
+
+def _restore_conf(spark, before: dict[str, str]) -> list[str]:
+    """Reset the session conf to ``before``; returns the changed keys
+    as ``key: old -> new`` (``None`` for unset)."""
+    after = spark.conf.getAll
+    diffs = []
+    for k in sorted(set(before) | set(after)):
+        old, new = before.get(k), after.get(k)
+        if old == new:
+            continue
+        diffs.append(f"{k}: {old} -> {new}")
+        if old is None:
+            spark.conf.unset(k)
+        else:
+            spark.conf.set(k, old)
+    return diffs
 
 
 def main() -> int:
     args = [a for a in sys.argv[1:] if a != "--all"]
     run_all = "--all" in sys.argv[1:]
     sf_dir = args[0] if args else "/root/testdata/sf0.01"
+    cwd = tempfile.mkdtemp(prefix="driver_sim_cwd_")
+    atexit.register(shutil.rmtree, cwd, True)
+    os.chdir(cwd)
+    os.environ.pop("PYTHONPATH", None)
     spec = importlib.util.spec_from_file_location(
-        "__spark_entry__", "/root/repo/__spark_entry__.py"
+        "__spark_entry__", str(REPO / "__spark_entry__.py")
     )
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
@@ -69,6 +104,7 @@ def main() -> int:
     bad = []
     for i, name in enumerate(window):
         t0 = time.time()
+        conf = spark.conf.getAll
         try:
             issues = compare(qs[name](spark, sf_dir), con, osql[name], name)
         except Exception as e:
@@ -79,6 +115,10 @@ def main() -> int:
             issues.append(f"{name}: LEAK {len(leaked)} active stream(s)")
             for q in leaked:
                 q.stop()
+        # nor any session conf
+        changed = _restore_conf(spark, conf)
+        if changed:
+            issues.append(f"{name}: CONF {'; '.join(changed)}")
         print(
             f"[{i + 1}/{total}] {'ok' if not issues else 'FAIL'} {name}"
             f" ({time.time() - t0:.1f}s)",

@@ -299,11 +299,13 @@ SHOWCASE: list[tuple[str, str]] = [
     ),
     (
         "wordcount_chunked_source",
-        "S2 end-to-end through the chunktext Python DataSource: each "
-        "space-aligned byte range is a scheduler-visible "
-        "InputPartition (BatchScan chunktext), then the standard "
-        "partial/final count — proof the reference's chunk contract "
-        "composes with ordinary DataFrame operators.",
+        "S2 end-to-end through the JVM text source: `lineSep=\" \"` "
+        "over 65536-byte splits reads space-aligned byte ranges "
+        "(FileScan text, one task per grid range, no Python worker), "
+        "then the standard partial/final count. The split size is "
+        "read when an action plans the scan, so the count runs inside "
+        "`files_split_size` and the returned plan (below) only scans "
+        "its vocabulary-sized checkpoint.",
     ),
     (
         "dsir_importance_weights",

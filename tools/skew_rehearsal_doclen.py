@@ -21,10 +21,11 @@ a stage is serializing on the whale beyond its scan cost.
 
 The structural mitigation for truly pathological rows (GB-scale
 documents that exceed task memory) is upstream of these operators by
-design: the S2 chunktext DataSource splits oversized texts into
-space-aligned byte-range InputPartitions BEFORE they ever become
-single rows (sources/chunk_source.py), which is the documented
-ingest path for unbounded raw text.
+design: the S2 space-aligned chunk scan (``read_text_corpus`` with
+``delimiter=" "`` inside ``files_split_size``) splits raw text into
+byte-range splits of space-delimited tokens BEFORE it ever becomes
+single rows, which is the documented ingest path for unbounded raw
+text.
 
 Appends/updates a `## Whale-document row-length skew rehearsal`
 section in SCALE_REHEARSAL.md. Run: python tools/skew_rehearsal_doclen.py
@@ -130,8 +131,8 @@ def main() -> None:
             " serial share is bounded by its own scan; everything"
             " else stays parallel). GB-scale rows that would exceed"
             " task memory are handled UPSTREAM by design: the S2"
-            " chunktext DataSource splits raw text into byte-range"
-            " InputPartitions before it becomes one row.",
+            " space-aligned chunk scan splits raw text into byte-range"
+            " splits before it becomes one row.",
             "",
             "| query | base s | whale s | wall ratio | byte ratio |"
             " rows base | rows whale |",
@@ -163,7 +164,7 @@ def main() -> None:
                 if ok
                 else "DEGRADED — a stage is serializing on the whale"
                 " beyond its scan cost; route oversized docs through"
-                " the chunktext splitter at ingest."
+                " the space-aligned chunk scan at ingest."
             )
         )
         from md_sections import upsert_section
