@@ -51,6 +51,15 @@ HEADLINE = [
 ]
 
 
+def _report_failure(what: str, e: Exception) -> str:
+    """Print ``bench: FAILED <what>: <Type>: <first line>`` to stderr
+    and return the ``<Type>: <first line>`` part."""
+    first = (str(e).strip().splitlines() or [""])[0]
+    msg = f"{type(e).__name__}: {first}"
+    print(f"bench: FAILED {what}: {msg}", file=sys.stderr)
+    return msg
+
+
 def time_queries(spark, sf_dir, names, queries):
     """Time each of ``names`` (``queries[name](spark, sf_dir)``) and
     return ``(timings, job_counts, errors)``.
@@ -104,9 +113,7 @@ def time_queries(spark, sf_dir, names, queries):
                     best = dt
                     best_jobs = n_jobs
         except Exception as e:  # noqa: BLE001 - isolate, report, go on
-            first = (str(e).strip().splitlines() or [""])[0]
-            errors[name] = f"{type(e).__name__}: {first}"
-            print(f"bench: FAILED {name}: {errors[name]}", file=sys.stderr)
+            errors[name] = _report_failure(name, e)
             continue
         timings[name] = round(best, 4)
         job_counts[name] = best_jobs
@@ -159,8 +166,12 @@ def main() -> None:
         )
         names = names[:subset]
 
-    # Warmup: force session + codegen init on a tiny plan.
-    registry.QUERIES["wordcount"](spark, sf_dir).limit(1).count()
+    # Warmup: force session + codegen init on a tiny plan. It fails
+    # loudly but, like a timed query, costs only itself.
+    try:
+        registry.QUERIES["wordcount"](spark, sf_dir).limit(1).count()
+    except Exception as e:  # noqa: BLE001 - isolate, report, go on
+        _report_failure("warmup", e)
 
     timings, job_counts, errors = time_queries(
         spark, sf_dir, names, registry.QUERIES

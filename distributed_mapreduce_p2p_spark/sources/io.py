@@ -14,10 +14,13 @@ typed parquet readers for the star schema.
 
 from __future__ import annotations
 
+import os
+import stat
 from contextlib import AbstractContextManager, contextmanager
 from typing import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from distributed_mapreduce_p2p_spark import TABLES
 
@@ -68,7 +71,9 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Scan one star-schema parquet table (S1/S3 analog).
 
     Columnar parquet scan with predicate pushdown + column pruning left
-    to Catalyst — filters applied by callers reach the scan.
+    to Catalyst — filters applied by callers reach the scan. The scan
+    carries the schema ``table_schema`` resolved for this file, so a
+    repeated read runs no Spark job.
 
     The testdata's event-time columns (``events.ts``,
     ``orders.o_orderdate``, ``lineitem.l_shipdate``) have shipped
@@ -86,33 +91,62 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
       driver and DuckDB both run UTC here);
     - TimestampNTZType → pass through untouched.
 
-    The legacy conf is set only on the nanos fallback path (and must
-    stay set for that lazy scan to execute), never otherwise.
+    The legacy conf is needed only to infer a nanos schema: a scan
+    given that schema (``ts long``) reads the nanos without it.
     """
     path = f"{sf_dir}/{name}.parquet"
-    time_cols = _TIME_COLUMNS.get(name)
-    if not time_cols:
-        return spark.read.parquet(path)
+    df = spark.read.schema(table_schema(spark, path)).parquet(path)
+    return _normalize_time_columns(df, _TIME_COLUMNS.get(name, ()))
 
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import LongType, TimestampType
 
+# The schema catalog: (applicationId, realpath, st_mtime_ns, st_size)
+# -> the StructType Spark inferred for that parquet file. Metadata
+# only, never rows; a rewritten file has a new key and is inferred
+# again.
+_SCHEMAS: dict[tuple, StructType] = {}
+
+
+def table_schema(spark: SparkSession, path: str) -> StructType:
+    """The schema Spark infers for the parquet file at ``path``,
+    inferred once per file version and session (inference is one
+    Spark job). A path that is not a local regular file (a directory,
+    a remote URI) is inferred on every call. A failed inference
+    raises and caches nothing.
+
+    Only a TIMESTAMP(NANOS) rejection is retried, with the
+    ``nanosAsLong`` legacy conf set for the retry alone; any other
+    failure (missing file, corrupt footer, permissions) surfaces
+    unchanged."""
     try:
-        df = spark.read.parquet(path)
-        # Footer schema resolution is eager, but force analysis so a
-        # nanos-typed file fails here, not at first use.
-        df.schema
+        st = os.stat(path)
+    except OSError:
+        st = None
+    key = None
+    if st is not None and stat.S_ISREG(st.st_mode):
+        key = (spark.sparkContext.applicationId, os.path.realpath(path),
+               st.st_mtime_ns, st.st_size)
+        if key in _SCHEMAS:
+            return _SCHEMAS[key]
+    try:
+        schema = spark.read.parquet(path).schema
     except Exception as e:
-        # Only the TIMESTAMP(NANOS) rejection gets the legacy-conf
-        # retry; any other failure (missing file, corrupt footer,
-        # permissions) must surface unchanged — and must NOT leak the
-        # legacy conf into the shared session.
         msg = str(e)
         if "NANOS" not in msg and "Illegal Parquet type" not in msg:
             raise
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(path)
-    for col in time_cols:
+        with scoped_conf(spark, "spark.sql.legacy.parquet.nanosAsLong", "true"):
+            schema = spark.read.parquet(path).schema
+    if key is not None:
+        _SCHEMAS[key] = schema
+    return schema
+
+
+def _normalize_time_columns(df: DataFrame, cols: tuple[str, ...]) -> DataFrame:
+    """``read_table``'s event-time fix-ups: every encoding of each of
+    ``cols`` becomes TIMESTAMP_NTZ wall clock."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import LongType, TimestampType
+
+    for col in cols:
         if col not in df.columns:
             continue
         dtype = df.schema[col].dataType

@@ -270,6 +270,64 @@ def test_bench_isolates_a_failing_query(spark, capsys):
     assert spark.sparkContext.getLocalProperty("spark.jobGroup.id") is None
 
 
+def test_bench_survives_an_unreadable_table(tmp_path):
+    """bench.py end to end over a copy of sf0.001 whose
+    ``documents.parquet`` is truncated: the warmup and the two word
+    counts that read it fail loudly, the next query is still timed and
+    the artifact is written."""
+    import shutil
+
+    sf = tmp_path / "sf0.001"
+    sf.mkdir()
+    for f in Path(SF_SMALL).iterdir():
+        shutil.copyfile(f, sf / f.name)
+    docs = sf / "documents.parquet"
+    docs.write_bytes(docs.read_bytes()[: docs.stat().st_size // 2])
+    detail_path = tmp_path / "detail.json"
+    env = dict(
+        os.environ,
+        SPARK_GRAFT_SF_DIR=str(sf),
+        SPARK_GRAFT_CPUS="2",
+        SPARK_GRAFT_DRIVER_MEM="2g",
+        SPARK_GRAFT_BENCH_SUBSET="3",
+        SPARK_GRAFT_BENCH_DETAIL=str(detail_path),
+    )
+    proc = subprocess.run(
+        [sys.executable, str(REPO / "bench.py")],
+        capture_output=True, text=True, timeout=900, env=env,
+        cwd=str(REPO),
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    assert "bench: FAILED warmup: " in proc.stderr
+    summary = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert summary["n_failed"] == 2
+    detail = json.loads(detail_path.read_text())
+    assert set(detail["errors"]) == {"wordcount", "wordcount_topk"}
+    assert set(detail["queries"]) == {"agg_pricing"}
+
+
+def test_bench_regress_reports_job_count_changes(tmp_path):
+    """tools/bench_regress.py lists each shared query whose job count
+    rose or fell and the job totals, and still exits 0."""
+    def detail(jobs):
+        return json.dumps({"queries": {n: 1.0 for n in jobs}, "jobs": jobs})
+
+    prev, cur = tmp_path / "prev.json", tmp_path / "cur.json"
+    prev.write_text(detail({"a": 3, "b": 5, "c": 2, "gone": 9}))
+    cur.write_text(detail({"a": 1, "b": 6, "c": 2, "new": 4}))
+    out = tmp_path / "regressions.md"
+    proc = subprocess.run(
+        [sys.executable, str(REPO / "tools" / "bench_regress.py"),
+         str(prev), str(cur), str(out)],
+        capture_output=True, text=True, timeout=60,
+    )
+    assert proc.returncode == 0, proc.stderr
+    assert "jobs 10 -> 9 over 3 shared queries (1 rose, 1 fell)" in proc.stdout
+    report = out.read_text()
+    assert "| b | 5 | 6 | +1 |\n| a | 3 | 1 | -2 |" in report
+    assert "| c |" not in report and "| gone |" not in report
+
+
 def test_bench_flags_a_truncated_job_count(spark, capsys, monkeypatch):
     from pyspark.status import StatusTracker
 

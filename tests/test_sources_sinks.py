@@ -425,6 +425,81 @@ def test_read_table_normalizes_time_encodings(spark, tmp_path):
             (r.event_id, str(r.ts)) for r in df.collect()
         )
     assert results["us"] == results["ns"] == results["ltz"]
+    # the nanos variant needs the legacy conf only to infer its
+    # schema; the session must not keep it
+    assert "spark.sql.legacy.parquet.nanosAsLong" not in spark.conf.getAll
+
+
+def test_read_table_resolves_a_schema_once(spark, count_jobs):
+    """A repeated read of one table file takes its schema from the
+    catalog: no inference job."""
+    from distributed_mapreduce_p2p_spark.sources.io import read_table
+
+    read_table(spark, SF_SMALL, "lineitem")
+    with count_jobs() as n:
+        read_table(spark, SF_SMALL, "lineitem").schema
+    assert n == [0]
+
+
+def test_read_table_reresolves_a_rewritten_file(spark, tmp_path):
+    """Rewriting a table file with an added column gives it a new
+    catalog key, so the next read shows the new column."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from distributed_mapreduce_p2p_spark.sources.io import read_table
+
+    f = tmp_path / "region.parquet"
+    pq.write_table(pa.table({"r_regionkey": [0, 1]}), f)
+    assert read_table(spark, str(tmp_path), "region").columns == [
+        "r_regionkey"
+    ]
+    pq.write_table(
+        pa.table({"r_regionkey": [0, 1], "r_name": ["A", "B"]}), f
+    )
+    df = read_table(spark, str(tmp_path), "region")
+    assert df.columns == ["r_regionkey", "r_name"]
+    assert sorted(tuple(r) for r in df.collect()) == [(0, "A"), (1, "B")]
+
+
+def test_read_table_caches_no_failed_inference(spark, tmp_path):
+    """A corrupt footer or a missing file raises on every call, with
+    the same error: a failed inference is never cached."""
+    from distributed_mapreduce_p2p_spark.sources.io import read_table
+
+    (tmp_path / "region.parquet").write_bytes(b"PAR1" + b"\0" * 64)
+    for table, cause in (("region", "is not a Parquet file"),
+                         ("nation", "PATH_NOT_FOUND")):
+        for _ in range(2):
+            with pytest.raises(Exception, match=cause):
+                read_table(spark, str(tmp_path), table)
+
+
+def test_schema_catalog_matches_spark_inference(spark):
+    """For every star-schema table the catalog holds exactly the
+    schema Spark infers, and read_table returns it with the time
+    columns as TIMESTAMP_NTZ."""
+    from pyspark.sql.types import StructField, StructType, TimestampNTZType
+
+    from distributed_mapreduce_p2p_spark import TABLES
+    from distributed_mapreduce_p2p_spark.sources.io import (
+        _TIME_COLUMNS,
+        read_table,
+        table_schema,
+    )
+
+    assert len(TABLES) == 10
+    for name in TABLES:
+        path = f"{SF_SMALL}/{name}.parquet"
+        inferred = spark.read.parquet(path).schema
+        assert table_schema(spark, path) == inferred, name
+        expected = StructType([
+            StructField(f.name, TimestampNTZType(), f.nullable)
+            if f.name in _TIME_COLUMNS.get(name, ())
+            else f
+            for f in inferred.fields
+        ])
+        assert read_table(spark, SF_SMALL, name).schema == expected, name
 
 
 def test_zorder_skips_on_both_columns(spark, tmp_path):
