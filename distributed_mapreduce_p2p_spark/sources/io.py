@@ -99,10 +99,13 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return _normalize_time_columns(df, _TIME_COLUMNS.get(name, ()))
 
 
-# The schema catalog: (applicationId, realpath, st_mtime_ns, st_size)
-# -> the StructType Spark inferred for that parquet file. Metadata
-# only, never rows; a rewritten file has a new key and is inferred
-# again.
+# The schema catalog: (applicationId, realpath, st_ino, st_mtime_ns,
+# st_ctime_ns, st_size) -> the StructType Spark inferred for that
+# parquet file. Metadata only, never rows. A file swapped in by rename
+# has a new inode; a rewrite in place changes the size or a file time.
+# File times tick at the filesystem clock's granularity (a few ms on
+# Linux), so a same-size in-place rewrite within one tick keeps the
+# old key and is not seen.
 _SCHEMAS: dict[tuple, StructType] = {}
 
 
@@ -124,7 +127,7 @@ def table_schema(spark: SparkSession, path: str) -> StructType:
     key = None
     if st is not None and stat.S_ISREG(st.st_mode):
         key = (spark.sparkContext.applicationId, os.path.realpath(path),
-               st.st_mtime_ns, st.st_size)
+               st.st_ino, st.st_mtime_ns, st.st_ctime_ns, st.st_size)
         if key in _SCHEMAS:
             return _SCHEMAS[key]
     try:

@@ -306,26 +306,23 @@ def test_bench_survives_an_unreadable_table(tmp_path):
     assert set(detail["queries"]) == {"agg_pricing"}
 
 
-def test_bench_regress_reports_job_count_changes(tmp_path):
+def test_bench_regress_reports_job_count_changes():
     """tools/bench_regress.py lists each shared query whose job count
-    rose or fell and the job totals, and still exits 0."""
-    def detail(jobs):
-        return json.dumps({"queries": {n: 1.0 for n in jobs}, "jobs": jobs})
-
-    prev, cur = tmp_path / "prev.json", tmp_path / "cur.json"
-    prev.write_text(detail({"a": 3, "b": 5, "c": 2, "gone": 9}))
-    cur.write_text(detail({"a": 1, "b": 6, "c": 2, "new": 4}))
-    out = tmp_path / "regressions.md"
-    proc = subprocess.run(
-        [sys.executable, str(REPO / "tools" / "bench_regress.py"),
-         str(prev), str(cur), str(out)],
-        capture_output=True, text=True, timeout=60,
+    rose or fell, most-fallen last, and the job totals over the queries
+    both detail files count."""
+    spec = importlib.util.spec_from_file_location(
+        "bench_regress", REPO / "tools" / "bench_regress.py"
     )
-    assert proc.returncode == 0, proc.stderr
-    assert "jobs 10 -> 9 over 3 shared queries (1 rose, 1 fell)" in proc.stdout
-    report = out.read_text()
-    assert "| b | 5 | 6 | +1 |\n| a | 3 | 1 | -2 |" in report
-    assert "| c |" not in report and "| gone |" not in report
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+
+    prev = {"jobs": {"a": 3, "b": 5, "c": 2, "gone": 9}}
+    cur = {"jobs": {"a": 1, "b": 6, "c": 2, "new": 4}}
+    lines, summary = mod.job_lines(prev, cur)
+    assert summary == "jobs 10 -> 9 over 3 shared queries (1 rose, 1 fell)"
+    assert lines[-3:] == ["| b | 5 | 6 | +1 |", "| a | 3 | 1 | -2 |", ""]
+    assert not any(l.startswith(("| c |", "| gone |", "| new |")) for l in lines)
+    assert mod.job_lines({"queries": {}}, cur)[1] == "no job counts"
 
 
 def test_bench_flags_a_truncated_job_count(spark, capsys, monkeypatch):

@@ -443,7 +443,10 @@ def test_read_table_resolves_a_schema_once(spark, count_jobs):
 
 def test_read_table_reresolves_a_rewritten_file(spark, tmp_path):
     """Rewriting a table file with an added column gives it a new
-    catalog key, so the next read shows the new column."""
+    catalog key, so the next read shows the new column; so does a
+    file swapped in by rename with the old file's size and times."""
+    import os
+
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -460,6 +463,18 @@ def test_read_table_reresolves_a_rewritten_file(spark, tmp_path):
     df = read_table(spark, str(tmp_path), "region")
     assert df.columns == ["r_regionkey", "r_name"]
     assert sorted(tuple(r) for r in df.collect()) == [(0, "A"), (1, "B")]
+
+    swap = tmp_path / "swap.parquet"
+    pq.write_table(
+        pa.table({"r_regionkey": [0, 1], "r_nume": ["A", "B"]}), swap
+    )
+    st = f.stat()
+    assert swap.stat().st_size == st.st_size
+    os.utime(swap, ns=(st.st_atime_ns, st.st_mtime_ns))
+    os.replace(swap, f)
+    assert read_table(spark, str(tmp_path), "region").columns == [
+        "r_regionkey", "r_nume"
+    ]
 
 
 def test_read_table_caches_no_failed_inference(spark, tmp_path):

@@ -17,7 +17,7 @@ after. Job counts are deterministic where seconds are noisy, so they
 show a changed job shape that host load can neither fake nor hide.
 
 Usage:
-    python tools/bench_regress.py [prev.json [cur.json [out.md]]]
+    python tools/bench_regress.py [prev.json [cur.json]]
 
 Exit code is 0 even when regressions exist — the gate REPORTS (the
 driver must still record the bench artifact); treating a regression
@@ -61,10 +61,9 @@ def job_lines(prev: dict, cur: dict) -> tuple[list[str], str]:
 
 
 def main() -> int:
-    args = sys.argv[1:]
-    prev_path = Path(args[0]) if len(args) > 0 else REPO / "BENCH_DETAIL.prev.json"
-    cur_path = Path(args[1]) if len(args) > 1 else REPO / "BENCH_DETAIL.json"
-    out_path = Path(args[2]) if len(args) > 2 else REPO / "BENCH_REGRESSIONS.md"
+    prev_path = Path(sys.argv[1]) if len(sys.argv) > 1 else REPO / "BENCH_DETAIL.prev.json"
+    cur_path = Path(sys.argv[2]) if len(sys.argv) > 2 else REPO / "BENCH_DETAIL.json"
+    out_path = REPO / "BENCH_REGRESSIONS.md"
     if not prev_path.exists() or not cur_path.exists():
         out_path.write_text(
             "# Bench regressions\n\nNo previous detail file to diff "
