@@ -137,27 +137,6 @@ def split_range(start: int, end: int, n_workers: int) -> list[tuple[int, int]]:
 
 # ---------------------------------------------------------------- joins
 
-def join_star(
-    lineitem: DataFrame,
-    orders: DataFrame,
-    customer: DataFrame,
-    nation: DataFrame,
-    region: DataFrame,
-) -> DataFrame:
-    """Standard star join: fact → orders → customer → nation → region.
-
-    nation/region (25 / 5 rows at every SF) are broadcast — at 100 TB
-    the lineitem↔orders join shuffles on orderkey while the dimension
-    joins stay broadcast hash joins with zero shuffle.
-    """
-    return (
-        lineitem.join(orders, lineitem.l_orderkey == orders.o_orderkey)
-        .join(customer, orders.o_custkey == customer.c_custkey)
-        .join(broadcast(nation), customer.c_nationkey == nation.n_nationkey)
-        .join(broadcast(region), nation.n_regionkey == region.r_regionkey)
-    )
-
-
 def membership_merge(left: DataFrame, right: DataFrame, key: str, counter: str) -> DataFrame:
     """J2: gossip full-outer merge-by-key, higher heartbeat wins
     (MergeLeft, gossip/gossip.go:87-108). Full outer join +

@@ -221,13 +221,6 @@ def bucket_expr(dialect: str, emb: str = "embedding", n_planes: int = N_PLANES) 
     return " + ".join(terms)
 
 
-def lsh_buckets(emb: DataFrame, n_planes: int = N_PLANES) -> DataFrame:
-    """(vec_id, bucket) — one narrow projection pass."""
-    return emb.select(
-        "vec_id", F.expr(bucket_expr("spark", "embedding", n_planes)).alias("bucket")
-    )
-
-
 def ann_lsh_topk(emb: DataFrame, n_queries: int = 8, k: int = 5) -> DataFrame:
     """Approximate top-k: exact cosine ranking restricted to
     candidates sharing the query's LSH bucket."""

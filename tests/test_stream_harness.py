@@ -1,7 +1,8 @@
 """The one streaming harness (streaming/harness.py): a stream that does
 not finish is an error and is never left running, every scratch dir is
 gone once its process exits, and no other start-and-wait copy is left
-in the registry or the CLI."""
+in the registry or the CLI. The registry stages its stream inputs
+through its one memo store, which ``clear_memos`` empties whole."""
 
 from __future__ import annotations
 
@@ -94,10 +95,51 @@ def test_exit_hook_removes_only_this_process_dirs(tmp_path, monkeypatch):
     assert not mine.exists() and inherited.exists()
 
 
+#: memoized function -> its arguments after (spark, sf_dir)
+_MEMOIZED = {
+    "_stage_events": (("event_id",),),
+    "_stage_corpus_txt": (),
+    "_stage_cdc": (),
+    "_dedup_cluster_table": (),
+    "_bpe_merges": (),
+    "_trade_und": (),
+    "_trade_edges": (),
+}
+
+
+def test_clear_memos_rebuilds_every_memoized_input(spark):
+    """A memo that ``clear_memos`` misses makes a rehearsal rep time a
+    memo hit (the undirected trade table was once such a memo)."""
+    from distributed_mapreduce_p2p_spark import registry
+
+    def call(name):
+        return getattr(registry, name)(spark, SF_SMALL, *_MEMOIZED[name])
+
+    def same(a, b):  # a staged path is rebuilt into a new scratch dir
+        return a is b or (isinstance(a, (str, tuple)) and a == b)
+
+    before = {name: call(name) for name in _MEMOIZED}
+    assert all(same(call(name), before[name]) for name in _MEMOIZED)
+    # defaults are part of the key: the explicit 0.5 is the same entry
+    assert registry._dedup_cluster_table(spark, SF_SMALL, 0.5) is (
+        before["_dedup_cluster_table"]
+    )
+    registry.clear_memos()
+    stale = [name for name in _MEMOIZED if same(call(name), before[name])]
+    assert stale == []
+
+
 def test_no_hand_rolled_stream_runs_remain():
     registry_src = (PKG / "registry.py").read_text()
     cli_src = (PKG / "__main__.py").read_text()
     assert registry_src.count("awaitTermination") == 0
     assert registry_src.count("tempfile.mkdtemp") == 0
+    # every parquet-sink stream runs through registry._event_stream
+    assert registry_src.count('writeStream.format("parquet")') == 1
+    # and every memo lives in registry._MEMO
+    for memo in ("_STAGED_EVENTS", "_CORPUS_TXT_MEMO", "_CLUSTER_MEMO",
+                 "_BPE_MERGES_MEMO", "_TRADE_EDGES_MEMO", "_TRADE_UND_MEMO",
+                 "_STAGED_CDC"):
+        assert memo not in registry_src
     assert cli_src.count("awaitTermination") == 0
     assert "REPLICATE_TIMEOUT_S" not in cli_src

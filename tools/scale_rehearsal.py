@@ -273,10 +273,11 @@ def time_query(spark, name: str, sf_dir: str) -> tuple[float, int]:
     best = float("inf")
     n = 0
     for _ in range(2):
-        # The per-process derivation memos (cluster table, BPE merges,
-        # trade edges) would make run 2 a no-op and best-of-2 would
-        # record the memo-hit time — this tool measures the FULL
-        # pipeline's scaling, so clear them before every run.
+        # The registry's memo store (cluster table, BPE merges, trade
+        # tables, staged stream inputs) would make run 2 a no-op and
+        # best-of-2 would record the memo-hit time — this tool
+        # measures the FULL pipeline's scaling, staging included, so
+        # clear it before every run.
         registry.clear_memos()
         t0 = time.perf_counter()
         n = registry.QUERIES[name](spark, sf_dir).count()
