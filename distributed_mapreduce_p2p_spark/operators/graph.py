@@ -1,4 +1,5 @@
-"""Distributed graph operators: triangle counting and PageRank.
+"""Graph operators: triangle counting, PageRank, BFS levels and
+shortest-path costs.
 
 The reference's graph-shaped work is its P2P overlay bookkeeping
 (gossip membership, `p2p/gossip.go`), which SURVEY.md §2.10 declares
@@ -27,13 +28,24 @@ Scale design:
   DIV 100 + (85 * sum(contrib)) DIV 100. Dangling-node mass is
   dropped (the classic MapReduce formulation), documented, and
   identical in the oracle.
+- ``bfs_levels`` and ``sssp_costs`` are driver-bounded: their
+  graphs are small by construction (the nation trade graph, at most
+  625 edges), so each collects its edge list once under an
+  ``_EDGE_CAP`` guard, loops in Python, and returns a local
+  relation. Per-round distributed state would cost Spark jobs per
+  round for no parallelism on a graph that size.
 """
 
 from __future__ import annotations
 
+import heapq
+
 from pyspark.sql import DataFrame, functions as F
 
 SCALE = 10**12  # fixed-point rank scale; 85*SCALE < 2^63 with margin
+
+#: Most edges ``bfs_levels`` / ``sssp_costs`` collect to the driver.
+_EDGE_CAP = 100_000
 
 
 def canonical_edges(edges: DataFrame, src: str, dst: str) -> DataFrame:
@@ -167,45 +179,85 @@ def pagerank_fixedpoint(
     return ranks.select("node", F.col("r").alias("rank_fp"))
 
 
+def _collect_edges(edges: DataFrame, *cols) -> list:
+    """The edge list's rows on the driver, refused past ``_EDGE_CAP``:
+    ``limit(cap+1)`` bounds the collect and detects overflow in the
+    same single job (the similarity.neardup_pairs guard)."""
+    rows = edges.select(*cols).limit(_EDGE_CAP + 1).collect()
+    if len(rows) > _EDGE_CAP:
+        raise ValueError(
+            f"graph traversal collects its edge list on the driver "
+            f"(>{_EDGE_CAP} rows)"
+        )
+    return rows
+
+
+def _adjacency(rows) -> dict:
+    """Undirected adjacency ``{u: {v: w}}`` from ``(u, v[, w])`` rows:
+    self-loops and null endpoints dropped, parallel edges (either
+    direction) merged to their minimum weight."""
+    adj: dict[int, dict[int, int]] = {}
+    for u, v, *w in rows:
+        if u is None or v is None or u == v:
+            continue
+        w = w[0] if w else 1
+        if w is None:
+            continue
+        for x, y in ((u, v), (v, u)):
+            nbrs = adj.setdefault(x, {})
+            if w < nbrs.get(y, w + 1):
+                nbrs[y] = w
+    return adj
+
+
+def _local_result(spark, by_node: dict, value: str) -> DataFrame:
+    """``(node, <value>)`` as a JVM local relation (``LocalTableScan``,
+    sized for the planner), rows ordered by node. A list of rows would
+    plan as ``Scan ExistingRDD``, with no size estimate."""
+    import pyarrow as pa
+
+    nodes = sorted(by_node)
+    table = pa.table(
+        {
+            "node": pa.array(nodes, pa.int64()),
+            value: pa.array([by_node[n] for n in nodes], pa.int64()),
+        }
+    )
+    return spark.createDataFrame(table, f"node: long, {value}: long")
+
+
 def bfs_levels(
     edges: DataFrame, src_node: int, src: str = "src", dst: str = "dst"
 ) -> DataFrame:
     """Breadth-first levels (unweighted shortest hop counts) from
     ``src_node`` over an undirected edge list: ``(node, level)`` for
-    every REACHED node. Frontier-expansion loop — each round is one
-    equi-join + anti-join (the iterative driver-loop class, like
-    PageRank/CC), bounded by the graph diameter; the frontier and
-    level table are checkpointed per round so round N's plan does not
-    nest N joins. At 100 TB both joins shuffle on the node key, and
-    state is the visited set — the standard distributed BFS shape."""
-    e = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .unionAll(edges.select(F.col(dst).alias("u"), F.col(src).alias("v")))
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=True)
+    every REACHED node (``src_node`` itself at level 0, even when it
+    has no edge). Self-loops, duplicate edges and edges with a null
+    endpoint are ignored.
+
+    Driver-bounded: the edge list is collected once (one Spark job)
+    and the frontier loop runs in Python on the driver, so the graph
+    must fit there; past ``_EDGE_CAP`` edges it raises ``ValueError``.
+    The registered callers feed the above-mean nation trade graph,
+    at most |nations|² = 625 edges at every SF. The result comes back
+    as a local relation."""
+    rows = _collect_edges(
+        edges, F.col(src).cast("long"), F.col(dst).cast("long")
     )
-    spark = edges.sparkSession
-    levels = spark.createDataFrame(
-        [(int(src_node), 0)], "node: long, level: long"
-    ).localCheckpoint(eager=True)
-    frontier = levels
+    adj = _adjacency(rows)
+    levels = {int(src_node): 0}
+    frontier = [int(src_node)]
     depth = 0
-    while True:
+    while frontier:
         depth += 1
-        nxt = (
-            frontier.join(e, frontier.node == e.u)
-            .select(F.col("v").alias("node"))
-            .distinct()
-            .join(levels.select("node"), "node", "left_anti")
-            .withColumn("level", F.lit(depth).cast("long"))
-            .localCheckpoint(eager=True)
-        )
-        if nxt.isEmpty():
-            break
-        levels = levels.unionByName(nxt).localCheckpoint(eager=True)
+        nxt = []
+        for u in frontier:
+            for v in adj.get(u, ()):
+                if v not in levels:
+                    levels[v] = depth
+                    nxt.append(v)
         frontier = nxt
-    return levels
+    return _local_result(edges.sparkSession, levels, "level")
 
 
 def sssp_costs(
@@ -216,65 +268,36 @@ def sssp_costs(
     weight: str = "w",
 ) -> DataFrame:
     """Single-source shortest-path COSTS over an undirected weighted
-    edge list (integer weights): ``(node, cost)`` for every reached
-    node — distributed Bellman-Ford. Each round relaxes every edge
-    out of the current distance table (one equi-join), min-combines
-    candidate distances with the incumbent (one groupBy), and stops
-    at fixpoint (no row improved). Converges in at most |V|-1 rounds
-    on non-negative weights; each round is checkpointed so round N's
-    plan does not nest N joins (same discipline as bfs_levels /
-    pagerank_fixedpoint above).
+    edge list: ``(node, cost)`` for every reached node. Weights are
+    cast to BIGINT, parallel edges take their minimum weight, and
+    self-loops and edges with a null endpoint or weight are ignored;
+    a negative weight raises ``ValueError``.
 
-    Integer weights keep the relaxation exactly reproducible on any
-    partitioning/engine (the pagerank_fixedpoint argument): min() of
-    bigints has no accumulation-order sensitivity, so an oracle can
-    replay it with a recursive CTE bit-for-bit. At 100 TB the edge
-    list shuffles once per round on the node key and the distance
-    table is the only growing state — the standard iterative
-    frontier-relaxation shape (Pregel-style SSSP without the
-    framework).
-    """
-    e = (
-        edges.select(
-            F.col(src).alias("u"), F.col(dst).alias("v"),
-            F.col(weight).cast("long").alias("w"),
-        )
-        .unionAll(
-            edges.select(
-                F.col(dst).alias("u"), F.col(src).alias("v"),
-                F.col(weight).cast("long").alias("w"),
-            )
-        )
-        .where(F.col("u") != F.col("v"))
-        .groupBy("u", "v")
-        .agg(F.min("w").alias("w"))
-        .localCheckpoint(eager=True)
+    Integer weights keep the result exactly reproducible: sums and
+    min() of Python ints have no accumulation-order sensitivity, so
+    an oracle can replay it with a recursive CTE bit-for-bit.
+
+    Driver-bounded like ``bfs_levels``: one guarded edge-list collect
+    (``ValueError`` past ``_EDGE_CAP``), Dijkstra in Python, and the
+    result handed back as a local relation. The registered caller
+    feeds the bilateral nation trade graph, at most 625 edges."""
+    rows = _collect_edges(
+        edges,
+        F.col(src).cast("long"),
+        F.col(dst).cast("long"),
+        F.col(weight).cast("long"),
     )
-    spark = edges.sparkSession
-    dist = spark.createDataFrame(
-        [(int(src_node), 0)], "node: long, cost: long"
-    ).localCheckpoint(eager=True)
-    while True:
-        relaxed = (
-            dist.join(e, dist.node == e.u)
-            .select(F.col("v").alias("node"), (F.col("cost") + F.col("w")).alias("cost"))
-            .unionByName(dist)
-            .groupBy("node")
-            .agg(F.min("cost").alias("cost"))
-            .localCheckpoint(eager=True)
-        )
-        at_fixpoint = (
-            relaxed.join(
-                dist.select("node", F.col("cost").alias("old_cost")),
-                "node",
-                "left",
-            )
-            .where(
-                F.col("old_cost").isNull()
-                | (F.col("cost") < F.col("old_cost"))
-            )
-            .isEmpty()
-        )
-        dist = relaxed
-        if at_fixpoint:
-            return dist
+    if any(r[2] is not None and r[2] < 0 for r in rows):
+        raise ValueError("sssp_costs needs non-negative edge weights")
+    adj = _adjacency(rows)
+    dist = {int(src_node): 0}
+    heap = [(0, int(src_node))]
+    while heap:
+        d, u = heapq.heappop(heap)
+        if d > dist[u]:
+            continue
+        for v, w in adj.get(u, {}).items():
+            if d + w < dist.get(v, d + w + 1):
+                dist[v] = d + w
+                heapq.heappush(heap, (d + w, v))
+    return _local_result(edges.sparkSession, dist, "cost")

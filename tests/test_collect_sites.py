@@ -17,6 +17,9 @@ Every allowlisted site is bounded or non-production:
 - operators/similarity.py   neardup_pairs baseline: limit(CAP+1)
                             caps the collect AND detects overflow;
                             the registered path is the blocked form
+- operators/graph.py        bfs_levels / sssp_costs: one guarded
+                            limit(_EDGE_CAP+1) edge-list collect;
+                            registered callers feed at most 625 edges
 - registry.py               _stage_corpus_txt toLocalIterator
                             (chunked-scan query's corpus staging — the
                             one adjudicated driver transit) + two
@@ -37,6 +40,7 @@ ALLOWED = {
     "streaming/replication.py": 2,
     "operators/text.py": 1,
     "operators/similarity.py": 1,
+    "operators/graph.py": 1,
     "registry.py": 3,
     "__main__.py": 1,
 }

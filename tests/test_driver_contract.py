@@ -67,6 +67,9 @@ def test_first_50_window_composition():
     assert head[0] == "wordcount_chunked_source"
     must_cover = {
         "wordcount_chunked_source",
+        # plans changed after round 11: driver-side nation-graph loops
+        "trade_graph_bfs_levels",
+        "trade_graph_shortest_cost",
         # plan changed in the r11 OPTIMIZATION round (signature
         # checkpoint; the agreement report composes it)
         "simhash_pairs",
