@@ -1,5 +1,6 @@
-"""Graph operators: triangle counting, PageRank, BFS levels and
-shortest-path costs.
+"""Graph operators: triangle counting, PageRank, and driver-side
+traversals (BFS levels, shortest-path costs, k-core numbers, label
+propagation, harmonic closeness, truss peeling).
 
 The reference's graph-shaped work is its P2P overlay bookkeeping
 (gossip membership, `p2p/gossip.go`), which SURVEY.md §2.10 declares
@@ -28,23 +29,26 @@ Scale design:
   DIV 100 + (85 * sum(contrib)) DIV 100. Dangling-node mass is
   dropped (the classic MapReduce formulation), documented, and
   identical in the oracle.
-- ``bfs_levels`` and ``sssp_costs`` are driver-bounded: their
-  graphs are small by construction (the nation trade graph, at most
-  625 edges), so each collects its edge list once under an
-  ``_EDGE_CAP`` guard, loops in Python, and returns a local
-  relation. Per-round distributed state would cost Spark jobs per
-  round for no parallelism on a graph that size.
+- ``bfs_levels``, ``sssp_costs``, ``kcore_numbers``,
+  ``label_propagation``, ``harmonic_closeness`` and ``truss_peel`` are
+  driver-bounded: their graphs are small by construction (the nation
+  trade graph, at most 625 edges), so each collects its edge list
+  once under an ``_EDGE_CAP`` guard, loops in Python, and returns a
+  local relation. Per-round distributed state would cost Spark jobs
+  per round for no parallelism on a graph that size. All of them
+  keep integer state, so results are exact.
 """
 
 from __future__ import annotations
 
 import heapq
+from collections import Counter
 
 from pyspark.sql import DataFrame, functions as F
 
 SCALE = 10**12  # fixed-point rank scale; 85*SCALE < 2^63 with margin
 
-#: Most edges ``bfs_levels`` / ``sssp_costs`` collect to the driver.
+#: Most edges a driver-side traversal collects.
 _EDGE_CAP = 100_000
 
 
@@ -210,20 +214,45 @@ def _adjacency(rows) -> dict:
     return adj
 
 
-def _local_result(spark, by_node: dict, value: str) -> DataFrame:
-    """``(node, <value>)`` as a JVM local relation (``LocalTableScan``,
-    sized for the planner), rows ordered by node. A list of rows would
-    plan as ``Scan ExistingRDD``, with no size estimate."""
+def _local_adjacency(edges: DataFrame, src: str, dst: str) -> dict:
+    """``_adjacency`` of the guarded collect of ``(src, dst)`` as BIGINT."""
+    return _adjacency(
+        _collect_edges(edges, F.col(src).cast("long"), F.col(dst).cast("long"))
+    )
+
+
+def _local_result(spark, rows, *names: str) -> DataFrame:
+    """Integer ``rows`` as a JVM local relation of BIGINT columns
+    ``names`` (``LocalTableScan``, sized for the planner), in sorted
+    row order. A list of rows would plan as ``Scan ExistingRDD``, with
+    no size estimate."""
     import pyarrow as pa
 
-    nodes = sorted(by_node)
+    cols = list(zip(*sorted(rows))) or [()] * len(names)
     table = pa.table(
-        {
-            "node": pa.array(nodes, pa.int64()),
-            value: pa.array([by_node[n] for n in nodes], pa.int64()),
-        }
+        {n: pa.array(c, pa.int64()) for n, c in zip(names, cols)}
     )
-    return spark.createDataFrame(table, f"node: long, {value}: long")
+    return spark.createDataFrame(
+        table, ", ".join(f"{n}: long" for n in names)
+    )
+
+
+def _bfs(adj: dict, start: int, max_hops: int | None = None) -> dict:
+    """Hop counts ``{node: d}`` from ``start`` (itself at 0), stopping
+    after ``max_hops`` levels when given."""
+    levels = {start: 0}
+    frontier = [start]
+    depth = 0
+    while frontier and depth != max_hops:
+        depth += 1
+        nxt = []
+        for u in frontier:
+            for v in adj.get(u, ()):
+                if v not in levels:
+                    levels[v] = depth
+                    nxt.append(v)
+        frontier = nxt
+    return levels
 
 
 def bfs_levels(
@@ -241,23 +270,8 @@ def bfs_levels(
     The registered callers feed the above-mean nation trade graph,
     at most |nations|² = 625 edges at every SF. The result comes back
     as a local relation."""
-    rows = _collect_edges(
-        edges, F.col(src).cast("long"), F.col(dst).cast("long")
-    )
-    adj = _adjacency(rows)
-    levels = {int(src_node): 0}
-    frontier = [int(src_node)]
-    depth = 0
-    while frontier:
-        depth += 1
-        nxt = []
-        for u in frontier:
-            for v in adj.get(u, ()):
-                if v not in levels:
-                    levels[v] = depth
-                    nxt.append(v)
-        frontier = nxt
-    return _local_result(edges.sparkSession, levels, "level")
+    levels = _bfs(_local_adjacency(edges, src, dst), int(src_node))
+    return _local_result(edges.sparkSession, levels.items(), "node", "level")
 
 
 def sssp_costs(
@@ -300,4 +314,108 @@ def sssp_costs(
             if d + w < dist.get(v, d + w + 1):
                 dist[v] = d + w
                 heapq.heappush(heap, (d + w, v))
-    return _local_result(edges.sparkSession, dist, "cost")
+    return _local_result(edges.sparkSession, dist.items(), "node", "cost")
+
+
+def kcore_numbers(
+    edges: DataFrame, src: str = "src", dst: str = "dst"
+) -> DataFrame:
+    """Coreness ``(node, coreness)`` of every node with an edge, by the
+    H-INDEX FIXPOINT (Lü et al., Nature Communications 2016): each node
+    starts at its degree, then every round sets label(v) = the largest
+    h with >= h neighbours labelled >= h, until no label changes; the
+    fixpoint is the k-core number. A node with no edge has coreness 0
+    and is not listed. Edges are undirected; self-loops, duplicates and
+    null endpoints are ignored. A 100-round guard raises
+    ``RuntimeError`` rather than spinning.
+
+    Driver-bounded like ``bfs_levels`` (one guarded collect, the
+    rounds in Python, a local relation back)."""
+    adj = _local_adjacency(edges, src, dst)
+    label = {v: len(nbrs) for v, nbrs in adj.items()}
+    for _ in range(100):
+        new = {}
+        for v, nbrs in adj.items():
+            ranked = sorted((label[u] for u in nbrs), reverse=True)
+            new[v] = max(min(r, x) for r, x in enumerate(ranked, 1))
+        if new == label:
+            break
+        label = new
+    else:
+        raise RuntimeError("kcore h-index fixpoint did not converge")
+    return _local_result(
+        edges.sparkSession, label.items(), "node", "coreness"
+    )
+
+
+def label_propagation(
+    edges: DataFrame, rounds: int, src: str = "src", dst: str = "dst"
+) -> DataFrame:
+    """Communities ``(node, label)`` by SYNCHRONOUS label propagation
+    (Raghavan et al. PRE'07) over an undirected edge list: every node
+    with an edge starts labelled with itself, and each of ``rounds``
+    rounds gives every node its neighbours' most frequent label. Ties
+    go to the higher vote count, then the lower label, so the result
+    is deterministic. Self-loops, duplicates and null endpoints are
+    ignored.
+
+    Driver-bounded like ``bfs_levels``."""
+    adj = _local_adjacency(edges, src, dst)
+    label = {v: v for v in adj}
+    for _ in range(rounds):
+        new = {}
+        for v, nbrs in adj.items():
+            votes = Counter(label[u] for u in nbrs)
+            new[v] = min(votes, key=lambda x: (-votes[x], x))
+        label = new
+    return _local_result(edges.sparkSession, label.items(), "node", "label")
+
+
+def harmonic_closeness(
+    edges: DataFrame, max_hops: int, src: str = "src", dst: str = "dst"
+) -> DataFrame:
+    """Harmonic closeness ``(node, n_reachable, harmonic_ppm)`` of every
+    node with an edge over an undirected edge list: a BFS from each
+    node, cut off at ``max_hops`` hops, counts the other nodes it
+    reaches and sums ``1000000 // d`` over their hop distances d.
+    Integer terms, so the sum is exact. Self-loops, duplicates and null
+    endpoints are ignored.
+
+    Driver-bounded like ``bfs_levels``."""
+    adj = _local_adjacency(edges, src, dst)
+    rows = []
+    for v in adj:
+        hops = [d for d in _bfs(adj, v, max_hops).values() if d > 0]
+        rows.append((v, len(hops), sum(1_000_000 // d for d in hops)))
+    return _local_result(
+        edges.sparkSession, rows, "node", "n_reachable", "harmonic_ppm"
+    )
+
+
+def truss_peel(
+    edges: DataFrame, rounds: int, src: str = "src", dst: str = "dst"
+) -> DataFrame:
+    """Bounded-round 4-truss peel ``(a, b, sup)`` (a < b) over an
+    undirected edge list: each of ``rounds`` rounds counts every
+    surviving edge's triangles (its support) on the surviving edge set
+    and keeps the edges with support >= 2. The result is the last
+    round's survivors with that round's support. Self-loops,
+    duplicates and null endpoints are ignored.
+
+    Driver-bounded like ``bfs_levels``."""
+    adj = _local_adjacency(edges, src, dst)
+    sup = {(a, b): 0 for a, nbrs in adj.items() for b in nbrs if a < b}
+    for _ in range(rounds):
+        nbrs: dict[int, set[int]] = {}
+        for a, b in sup:
+            nbrs.setdefault(a, set()).add(b)
+            nbrs.setdefault(b, set()).add(a)
+        sup = {(a, b): len(nbrs[a] & nbrs[b]) for a, b in sup}
+        sup = {e: n for e, n in sup.items() if n >= 2}
+    return _local_result(
+        edges.sparkSession,
+        ((a, b, n) for (a, b), n in sup.items()),
+        "a",
+        "b",
+        "sup",
+    )

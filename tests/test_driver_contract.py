@@ -70,6 +70,10 @@ def test_first_50_window_composition():
         # plans changed after round 11: driver-side nation-graph loops
         "trade_graph_bfs_levels",
         "trade_graph_shortest_cost",
+        "kcore_decomposition",
+        "label_propagation_communities",
+        "closeness_centrality",
+        "truss_peel_rounds",
         # plan changed in the r11 OPTIMIZATION round (signature
         # checkpoint; the agreement report composes it)
         "simhash_pairs",

@@ -140,16 +140,16 @@ def test_markov_absorption_states_checkpointed_once():
 #: each was measured individually (numbers at the call sites and in
 #: OPTIMIZATION_r10.md). trade_graph_components measured the scope
 #: and REJECTED it (adjudicated at its call site), so it is absent.
+#: kcore_decomposition, label_propagation_communities and
+#: closeness_centrality no longer loop in Spark: their rounds run on
+#: the driver in operators/graph.py (pinned by tests/test_graph.py).
 SCOPED_LOOP_QUERIES = [
     "q_markov_stationary",
     "q_markov_absorption",
     "q_hits_hubs_authorities",
-    "q_label_propagation_communities",
     "q_trade_graph_shortest_cost",
     "q_trade_graph_bfs_levels",
-    "q_kcore_decomposition",
     "q_ipf_raking",
-    "q_closeness_centrality",
 ]
 
 

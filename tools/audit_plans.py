@@ -216,10 +216,8 @@ WHITELIST = {
     "markov_stationary": "5-row iterate broadcast-joined to the transition cells per step",
     "token_cooccurrence_lift": "1-row corpus-total aggregate broadcast-attached to the filtered pair table",
     "hits_hubs_authorities": "per-half-round 1-row max normalizer + 1-row edge-mean stats broadcast onto <=|nations|-row states",
-    "label_propagation_communities": "1-row edge-mean stats attach inside the shared _trade_edges derivation (graph-family scalar attach)",
     "cochran_armitage_trend": "1-row five-moment aggregate broadcast onto the 5 score rows (the anova_oneway output shape)",
     "ipf_raking": "1-row grand-total and cell-count attaches feeding the margin targets and uniform seed (25-cell state)",
-    "closeness_centrality": "1-row edge-mean stats attach inside the shared _trade_edges derivation (graph-family scalar attach)",
     "friedman_test": "1-row (k, b) totals and 1-row SS aggregate broadcast onto the 5 region rows (anova output shape)",
     "negative_sampling_pairs": "1-row part-count attach feeding the hash modulo (the two-phase index carries its own n_parts-row offsets)",
     "promo_diff_in_diff": "1-row four-cell pivot broadcast onto the 4 evidence rows (DiD output shape)",
@@ -227,7 +225,6 @@ WHITELIST = {
     "rocchio_classification_report": "|labels|-row label list cross-joined onto per-point predictions for the report rollup (bounded by k)",
     "kendall_tau_rankings": "|nations|^2-bounded inequality pair join on the 25-row aggregated league table (the ks_statistic_sources shape)",
     "ams_f2_sketch": "1-row exact-F2 aggregate cross-joined with the 1-row sketch estimate (two scalar cells)",
-    "trade_graph_shortest_cost": "1-row totals/seed aggregates over the <=|nations|^2 bilateral table (graph-family scalar attach)",
     "share_of_parent": "1-row grand-total aggregate broadcast-attached to the |nations|-row leaf table",
     "target_encoding": "1-row global (gs, gn) aggregate broadcast-attached to the |categories|-row encoder table",
     "price_tier_stats": "4-row broadcast tier table joined on BETWEEN (bounded dim side, constant cost per fact row — the legitimate range-dim BNLJ)",

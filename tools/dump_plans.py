@@ -220,10 +220,11 @@ SHOWCASE: list[tuple[str, str]] = [
     ),
     (
         "closeness_centrality",
-        "Min-plus doubling APSP: the final plan is the 5th tropical "
-        "self-squaring of a localCheckpointed |V|^2 distance table — "
-        "log(diameter) joins instead of |V| BFS sweeps; the one "
-        "fact-scale trade aggregation happened before checkpoint 0.",
+        "Driver-side harmonic closeness: the plan reads a "
+        "LocalTableScan of per-node (n_reachable, harmonic_ppm), one "
+        "BFS per node cut at 32 hops over a single guarded edge-list "
+        "collect, and broadcast-joins nation for the names; the one "
+        "fact-scale trade aggregation happened before the collect.",
     ),
     (
         "token_cooccurrence_lift",
